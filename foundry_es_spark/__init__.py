@@ -8,7 +8,8 @@ SURVEY.md §0) as idiomatic Spark:
   ``(repo, path, commit, lang, content)`` replayed as Structured Streaming
   micro-batches (or bounded batch replay),
 - per-key latest-wins compaction + op folding (the reference's
-  duplicate/update check re-expressed as ``max_by`` aggregation),
+  duplicate/update check re-expressed as one sorted Arrow pass over the
+  sink's write layout),
 - DATS-style metadata normalization as vectorized pandas/Arrow UDFs
   (never per-row Python),
 - MERGE-INTO-equivalent upserts keyed on ``(repo, path)`` into an
@@ -17,7 +18,8 @@ SURVEY.md §0) as idiomatic Spark:
 - epoch-fenced exactly-once commits with per-partition offsets, lineage
   and metrics tables, resumable from checkpoint,
 - add / rename / type-widen schema evolution on the normalized columns,
-- explicit hot-key salting (two-phase compaction) against shuffle skew.
+- adaptive hot-bucket salting (buckets hot in the previous epoch spread
+  over more compaction tasks) against shuffle skew.
 """
 
 __version__ = "0.1.0"

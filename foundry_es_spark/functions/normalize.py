@@ -229,8 +229,8 @@ def with_normalized_columns(
         .withColumn("lang", normalize_lang("lang"))
     )
     if include_meta and "meta" not in df.columns:
-        # compaction strategies that already ran an Arrow pass (sorted,
-        # operators/cdc.py) emit meta there; don't pay a second transfer
+        # the sorted compaction kernel (operators/cdc.py) already emits
+        # meta in its Arrow pass; don't pay a second transfer
         out = out.withColumn("meta", F.when(c.isNotNull(), dats_normalize_meta(c)))
     if "dats" not in df.columns:
         out = out.withColumn("dats", dats_nested_expr(content_col))

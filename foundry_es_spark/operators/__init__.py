@@ -1,7 +1,6 @@
 """CDC core operators (SURVEY.md §2.2, C1–C8)."""
 
 from foundry_es_spark.operators.cdc import (
-    compact_latest,
     compact_latest_patch,
     reharvest_diff_events,
     suppress_unchanged,
@@ -10,7 +9,6 @@ from foundry_es_spark.operators.cdc import (
 )
 
 __all__ = [
-    "compact_latest",
     "compact_latest_patch",
     "reharvest_diff_events",
     "suppress_unchanged",

@@ -1,12 +1,12 @@
 """CDC core operators (SURVEY.md §2.2).
 
-C1 latest-wins compaction + C2 op fold: one shuffle via
-``groupBy(key).agg(max_by(struct(*), seq))`` — preferred over
-window+row_number at scale because partial aggregation (map-side combine)
-collapses hot keys before the shuffle, so a key with 10^6 updates in a
-batch ships O(partitions) rows, not 10^6. The optional explicit two-phase
-salting (C4) covers engines/configs where a single reduce key would still
-concentrate on one task.
+C1 latest-wins compaction + C2 op fold run as ONE vectorised Arrow pass
+(:func:`compact_sorted_partitions`): events cross the exchange once,
+already in the sink's (bucket, salt) write layout and sorted by
+``(key, seq)``, so the fold is a boundary compare over each sorted
+partition. Hot repos are spread by adaptive hot-bucket salting (C4).
+Sparse-update (op='P') epochs take the column-wise aggregate fold
+(:func:`compact_latest_patch`) instead.
 
 Reference analogue: the ingestion service's duplicate/update check and
 status classification [F-ES: DocumentIngestionService — UNVERIFIED,
@@ -44,41 +44,6 @@ def validate_split(events: DataFrame, allow_patch: bool = False) -> tuple[DataFr
     return events.where(valid), events.where(~F.coalesce(valid, F.lit(False)))
 
 
-def compact_latest(
-    events: DataFrame,
-    key_cols: list[str] | None = None,
-    order_col: str = "seq",
-    salt_partitions: int = 0,
-) -> DataFrame:
-    """C1+C2: keep only the max-`order_col` event per key; the surviving
-    row's op is the net effect (I/U ⇒ upsert, D ⇒ delete) fed to MERGE.
-
-    salt_partitions > 0 adds an explicit two-phase aggregation: local
-    max_by within (key, salt) slices, then global max_by per key — the
-    hot-key salting demanded by BASELINE.json north_rule even though
-    map-side combine already bounds skew for this aggregation shape.
-    """
-    key_cols = key_cols or KEY_COLS
-    payload = F.struct(*[F.col(c) for c in events.columns])
-    if salt_partitions > 0:
-        salt = F.pmod(F.col(order_col), F.lit(salt_partitions)).alias("_salt")
-        local = (
-            events.groupBy(*key_cols, salt)
-            .agg(F.max_by(payload, F.col(order_col)).alias("r"))
-            .select(*key_cols, "r")
-        )
-        return (
-            local.groupBy(*key_cols)
-            .agg(F.max_by(F.col("r"), F.col(f"r.{order_col}")).alias("r"))
-            .select("r.*")
-        )
-    return (
-        events.groupBy(*key_cols)
-        .agg(F.max_by(payload, F.col(order_col)).alias("r"))
-        .select("r.*")
-    )
-
-
 def compact_latest_patch(
     events: DataFrame,
     key_cols: list[str] | None = None,
@@ -96,17 +61,18 @@ def compact_latest_patch(
     - P against a row that does not exist is a no-op (Debezium's
       behavior for a patch on a missing document).
 
-    One aggregate, one shuffle, map-side combinable — the same scale
-    shape as :func:`compact_latest`. Per non-key column the winner is
-    ``max_by(col, seq)`` over the events that SET that column (all
-    I/U/D rows, plus P rows where the column is non-null; ``max_by``
-    ignores null ordering keys, pinned by test_patch). The net op is
-    decided by the latest NON-patch event: none → ``'P'`` (the key's base
-    image lives in an earlier epoch — the pipeline resolves it against
-    the stored row), ``D`` → delete (patches after a delete are no-ops),
-    else upsert. Output shape = input shape with ``op`` = net op and
-    ``order_col`` = max seq seen (so seq-conditional MERGE and lineage
-    behave identically to the plain fold).
+    One aggregate, one shuffle, map-side combinable (a key with many
+    updates in a batch ships O(partitions) rows, not one per update).
+    Per non-key column the winner is ``max_by(col, seq)`` over the events
+    that SET that column (all I/U/D rows, plus P rows where the column is
+    non-null; ``max_by`` ignores null ordering keys, pinned by
+    test_patch). The net op is decided by the latest NON-patch event:
+    none → ``'P'`` (the key's base image lives in an earlier epoch — the
+    pipeline resolves it against the stored row), ``D`` → delete (patches
+    after a delete are no-ops), else upsert. Output shape = input shape
+    with ``op`` = net op and ``order_col`` = max seq seen (so
+    seq-conditional MERGE and lineage behave identically to the plain
+    fold).
     """
     key_cols = key_cols or KEY_COLS
     val_cols = [c for c in events.columns if c not in (*key_cols, order_col, "op")]
@@ -132,32 +98,6 @@ def compact_latest_patch(
     return out.select(*select)
 
 
-def compact_latest_winners(
-    events: DataFrame,
-    key_cols: list[str] | None = None,
-    order_col: str = "seq",
-    broadcast_winners: bool = True,
-) -> DataFrame:
-    """C1+C2 alternative physical strategy: compact WITHOUT shuffling the
-    payload.
-
-    The wide ``content`` column dominates epoch I/O; ``compact_latest``'s
-    groupBy ships it through a full shuffle just to discard ~30% of rows.
-    Here the shuffle only carries ``(key, seq)`` (the winners aggregation —
-    parquet column pruning means the scan for it reads a few narrow
-    columns), and the payload is then joined back against the original scan
-    on ``(key, seq)``: a broadcast hash join when the per-epoch key set fits
-    (local sandbox, and any cluster epoch up to ~10^7 keys), else a regular
-    join that still ships content only once. Requires `order_col` unique per
-    key (the engine's global-seq contract).
-    """
-    key_cols = key_cols or KEY_COLS
-    winners = events.groupBy(*key_cols).agg(F.max(order_col).alias(order_col))
-    if broadcast_winners:
-        winners = F.broadcast(winners)
-    return events.join(winners, on=[*key_cols, order_col], how="inner")
-
-
 def compact_sorted_partitions(
     events: DataFrame,
     n_buckets: int,
@@ -173,8 +113,8 @@ def compact_sorted_partitions(
     hot_salts: int = 0,
     bucket_acc=None,
 ) -> DataFrame:
-    """C1+C2 physical strategy "sorted": ONE payload shuffle, straight to
-    the sink's write layout.
+    """C1+C2 latest-wins compaction: ONE payload shuffle, straight to the
+    sink's write layout.
 
     Events are repartitioned by ``(bkt, salt)`` — the exact layout the lake
     table writes — and sorted within partitions by ``(key, seq)``. Because

@@ -29,9 +29,7 @@ from foundry_es_spark.functions.normalize import (
 from foundry_es_spark.lake import LakeTable
 from foundry_es_spark.lake import log as commitlog
 from foundry_es_spark.operators.cdc import (
-    compact_latest,
     compact_latest_patch,
-    compact_latest_winners,
     compact_sorted_partitions,
     suppress_unchanged,
     validate_split,
@@ -172,18 +170,13 @@ class PipelineConfig:
     table_dir: str
     n_buckets: int = 16
     n_parts: int = 8                 # stream partitions for offset tracking
-    salt_partitions: int = 0         # C4 two-phase compaction (0 = map-side combine only)
     files_per_bucket: int = 1        # >1 parallelizes writes of hot buckets
     normalize: bool = True           # T1/T2 enhancement stage
     suppress_no_ops: bool = False    # C3 (extra state read per epoch)
     rename_map: dict[str, str] = field(default_factory=dict)  # C7 declared renames
-    merge_mode: str = "mor"          # "mor" (delta append + compaction) | "cow" (rewrite touched buckets)
-    compact_threshold: int = 8       # mor: compact a bucket once it holds this many delta generations
-    compact_strategy: str = "sorted" # "sorted" (one shuffle straight to write layout, pandas dedup)
-                                     # | "winners" (key-only shuffle + payload join-back)
-                                     # | "agg" (max_by full shuffle)
-    record_partition_metrics: bool = False  # §5.2 straggler evidence in lineage (sorted strategy)
-    fused_write: bool | str = "auto" # mor+sorted: tasks write the delta parquet directly
+    compact_threshold: int = 8       # compact a bucket once it holds this many delta generations
+    record_partition_metrics: bool = False  # §5.2 straggler evidence in lineage
+    fused_write: bool | str = "auto" # tasks write the delta parquet directly
                                      # (Iceberg task-writer shape; no JVM re-encode, no
                                      # output committer). "auto" = only when normalize is
                                      # off: the fused sink needs the derived columns
@@ -192,7 +185,7 @@ class PipelineConfig:
                                      # than the fused write saves (measured ~+1.5s vs
                                      # -0.4s per 100k epoch); replication-shape epochs
                                      # (no enrichment) run ~25% faster fused.
-    compact_rows_per_task: int = 50_000  # sorted strategy: target rows per compaction task
+    compact_rows_per_task: int = 50_000  # target rows per compaction task
                                          # (sets explicit partition count = rows/target,
                                          # clamped to the (bucket x salt) grid)
     hot_bucket_salts: int = 0        # C4 adaptive: buckets whose input-row share in the
@@ -226,8 +219,8 @@ class PipelineConfig:
                                      # an EARLIER epoch against the stored row via a
                                      # bucket-pruned selective read; a patch for a
                                      # key that does not exist is a counted no-op
-                                     # (n_orphan_patches in lineage). Uses the "agg"
-                                     # fold shape (fused/sorted sink disabled);
+                                     # (n_orphan_patches in lineage). Uses the
+                                     # aggregate fold (fused/sorted sink disabled);
                                      # incompatible with suppress_no_ops (content
                                      # digest can't witness non-content patches).
     patch_resolve: str = "write"     # WHERE net-'P' keys resolve against the base
@@ -288,12 +281,6 @@ class CdcPipeline:
         if config.patch_resolve not in ("write", "merge"):
             raise ValueError(
                 f"patch_resolve must be 'write' or 'merge', got {config.patch_resolve!r}"
-            )
-        if config.patch_resolve == "merge" and config.merge_mode != "mor":
-            raise ValueError(
-                "patch_resolve='merge' defers resolution to the MoR merge; "
-                "merge_mode='cow' rewrites full rows per epoch and must "
-                "resolve at write"
             )
 
     # ------------------------------------------------------------- table
@@ -395,11 +382,10 @@ class CdcPipeline:
 
         Scale shape: the selective read is bucket-pruned via the RAW P
         events (bucket is a pure function of repo — the same pattern as
-        suppress_no_ops / the CoW touched-buckets hint), so the state read
-        costs O(patched buckets), never a table scan. Orphan patches — key
-        absent or tombstoned — are no-ops (Debezium semantics), dropped
-        and counted by an Observation riding the merge job
-        (``n_orphan_patches`` in the epoch's lineage info)."""
+        suppress_no_ops), so the state read costs O(patched buckets), never
+        a table scan. Orphan patches — key absent or tombstoned — are no-ops
+        (Debezium semantics), dropped and counted by an Observation riding
+        the merge job (``n_orphan_patches`` in the epoch's lineage info)."""
         from foundry_es_spark.lake.table import bucket_expr
 
         base = compacted.where(F.col("op") != "P")
@@ -536,13 +522,10 @@ class CdcPipeline:
                 _, dead = validate_split(batch, self.cfg.patch_ops)
                 self._write_dead_letters(dead, epoch_id)
         # Footer-hint path: validity is counted by an Observation riding the
-        # main job (pre-filter), so no extra scan happens either way. Under
-        # the "winners" strategy the observed subtree executes twice
-        # (broadcast build + probe) and would double-count, so that case
-        # derives the count from the quarantine split instead (see _info).
-        use_obs = offsets_hint is not None and self.cfg.compact_strategy != "winners"
-        obs_pre = Observation() if use_obs else None
-        if use_obs:
+        # main job (pre-filter), so no extra scan happens either way.
+        obs_pre = None
+        if offsets_hint is not None:
+            obs_pre = Observation()
             batch = batch.observe(
                 obs_pre,
                 F.sum((~F.coalesce(ok, F.lit(False))).cast("int")).alias("n_dead"),
@@ -564,8 +547,6 @@ class CdcPipeline:
 
         if (
             (fw is True or (fw == "auto" and not self.cfg.normalize))
-            and self.cfg.merge_mode == "mor"
-            and self.cfg.compact_strategy == "sorted"
             and not self.cfg.suppress_no_ops
             and not self.cfg.patch_ops
             and supports_fused_sink(table)
@@ -576,21 +557,16 @@ class CdcPipeline:
                 offsets_hint, obs_pre, t0, stage_sec, nb,
             )
 
-        # C1+C2 — three physical strategies for the same logical operator
-        # (operators/cdc.py): "sorted" ships the payload exactly once,
-        # straight into the sink's (bucket, salt) write layout; "winners"
-        # keeps content out of the compaction shuffle via a key-only
-        # aggregate + join-back; "agg" is the classic max_by groupBy.
-        pre_partitioned = False
+        # C1+C2 (operators/cdc.py): the payload crosses the exchange once,
+        # straight into the sink's (bucket, salt) write layout.
         part_acc = None
         bucket_acc = None
         if self.cfg.patch_ops:
-            # patch fold: same one-shuffle hash-aggregate shape as "agg"
-            # (map-side combinable); the sorted/fused layouts don't apply
-            # because net-'P' keys take a join against the stored rows
-            # before they are full rows at all.
+            # patch fold: a one-shuffle, map-side combinable hash aggregate;
+            # the sorted/fused layouts don't apply because net-'P' keys take
+            # a join against the stored rows before they are full rows at all.
             compacted = compact_latest_patch(valid)
-        elif self.cfg.compact_strategy == "sorted":
+        else:
             if self.cfg.record_partition_metrics:
                 from foundry_es_spark.operators.metrics import partition_metrics_acc
 
@@ -607,13 +583,7 @@ class CdcPipeline:
                 hot_salts=self.cfg.hot_bucket_salts,
                 bucket_acc=bucket_acc,
             )
-            # cow's merge_upsert re-shuffles on write (it must union with
-            # the read-back target), so only mor can claim the layout.
-            pre_partitioned = self.cfg.merge_mode == "mor"
-        elif self.cfg.compact_strategy == "winners":
-            compacted = compact_latest_winners(valid)
-        else:
-            compacted = compact_latest(valid, salt_partitions=self.cfg.salt_partitions)
+        pre_partitioned = not self.cfg.patch_ops
 
         # C7 — evolve the table to accept this batch's payload shape.
         payload_fields = [f for f in batch.schema.fields if f.name not in ENVELOPE_COLS]
@@ -728,17 +698,11 @@ class CdcPipeline:
                 from foundry_es_spark.operators.metrics import summarize_partitions
 
                 out["partition_metrics"] = summarize_partitions(part_acc.value)
-            if offsets_hint is not None:
-                if obs_pre is not None:
-                    n_dead = int(observed_metrics(obs_pre, n_dead=0)["n_dead"] or 0)
-                    if n_dead:
-                        _, dead = validate_split(raw_batch, self.cfg.patch_ops)
-                        self._write_dead_letters(dead, epoch_id)
-                else:
-                    # winners strategy: Observation would double-count, so
-                    # the quarantine split itself is the source of truth.
+            if obs_pre is not None:
+                n_dead = int(observed_metrics(obs_pre, n_dead=0)["n_dead"] or 0)
+                if n_dead:
                     _, dead = validate_split(raw_batch, self.cfg.patch_ops)
-                    n_dead = self._write_dead_letters(dead, epoch_id)
+                    self._write_dead_letters(dead, epoch_id)
                 out["n_dead_letters"] = n_dead
             if patch_obs is not None:
                 out["n_orphan_patches"] = int(
@@ -750,40 +714,17 @@ class CdcPipeline:
             info_out.update(out)
             return out
 
-        if self.cfg.merge_mode == "mor":
-            merge_stats = table.append_delta(
-                merge_batch,
-                fence=(self.cfg.pipeline_id, epoch_id),
-                files_per_bucket=self.cfg.files_per_bucket,
-                info=_info,
-                pre_partitioned=pre_partitioned,
-            )
-        else:
-            # CoW: derive the touched buckets from the RAW valid batch
-            # (bucket is a pure function of repo) — the same bucket-pruned
-            # pattern as suppress_no_ops above. Computing them from
-            # merge_batch would re-execute the whole compaction kernel
-            # (mapInArrow is a projection barrier).
-            from foundry_es_spark.lake.table import bucket_expr
-
-            touched = [
-                r[0]
-                for r in valid.select(
-                    bucket_expr(nb).alias("b")
-                ).distinct().collect()
-            ]
-            merge_stats = table.merge_upsert(
-                merge_batch,
-                fence=(self.cfg.pipeline_id, epoch_id),
-                files_per_bucket=self.cfg.files_per_bucket,
-                info=_info,
-                touched_buckets=touched,
-            )
+        merge_stats = table.append_delta(
+            merge_batch,
+            fence=(self.cfg.pipeline_id, epoch_id),
+            files_per_bucket=self.cfg.files_per_bucket,
+            info=_info,
+            pre_partitioned=pre_partitioned,
+        )
         stage_sec["merge_write"] = round(time.monotonic() - t2, 3)
         self._fold_bucket_acc(bucket_acc)
         info = {**info, **{k: info_out[k] for k in ("n_keys", "n_deletes", "n_dead_letters", "n_orphan_patches") if k in info_out}}
-        if self.cfg.merge_mode == "mor":
-            merge_stats = self._maybe_compact(table, merge_stats, stage_sec)
+        merge_stats = self._maybe_compact(table, merge_stats, stage_sec)
         return {**info, **merge_stats, "stage_sec": stage_sec, "skipped": False}
 
     def _apply_epoch_fused(

@@ -43,7 +43,8 @@ class RoutedPipeline:
 
     ``base``: the PipelineConfig template; each route clones it with its
     own table_dir, a derived pipeline_id (``<base>:<route>``), and any
-    per-route overrides (e.g. a different merge_mode for an audit table).
+    per-route overrides (e.g. a different compact_threshold for an audit
+    table).
     """
 
     def __init__(self, spark: SparkSession, base: PipelineConfig, routes: list[Route]):

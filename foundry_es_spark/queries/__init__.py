@@ -33,6 +33,10 @@ _MODULES = [
 # stop at exactly 50 rows (50 of 53 recorded), so the first 50 positions
 # must cover EVERY family; later positions hold surface extensions whose
 # siblings already prove the family, then rows-only entries last.
+# A row enters the top 50 only after a dtype-strict local pass
+# (queries.common.oracle_mismatches, run by tests/test_queries_oracle.py
+# and scripts/check_oracles.py): a value-equal but int-vs-float column
+# passes a lax check and fails the CORRECTNESS board's value hash.
 _BOARD_PRIORITY = [
     # core relational (§2.4 Q1–Q13)
     "q1_scan_filter", "q2_join_orders_customer", "q3_multiway_join_revenue",
@@ -80,9 +84,12 @@ _BOARD_PRIORITY = [
     # (q24b/q25b by q24/q25; keep_first by dedup_exact;
     # text_lang_confusion by text_lang_id; the corpus caps by
     # corpus_curate_e2e which ends in a domain cap; multimodal_features /
-    # multimodal_decode_wav by multimodal_decode_ppm; text_pii_scrub /
-    # dedup_repeated_ngrams by the regex-projection and shingle-join
-    # rows already on the board)
+    # multimodal_decode_wav by multimodal_decode_ppm). text_pii_scrub and
+    # dedup_repeated_ngrams are NOT siblings of a board row — the
+    # regex-projection and shingle-join rows share their operators, not
+    # their semantics — so the invariant above does not cover them: they
+    # are accepted off-board as judgement calls, checked only by the local
+    # oracle pass.
     "q24b_vectorized_scale", "q25b_map_in_pandas", "dedup_exact_keep_first",
     "multimodal_decode_wav", "multimodal_features",
     "text_lang_confusion", "corpus_domain_cap", "corpus_mix_budget",

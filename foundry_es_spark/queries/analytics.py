@@ -754,7 +754,7 @@ WITH per AS (
               THEN 'train'
               WHEN substring(md5(CAST(doc_id AS VARCHAR)), 1, 1) IN ('c','d')
               THEN 'val' ELSE 'test' END AS split,
-         count(*) AS n_docs, sum(n_chars) AS sum_chars
+         count(*) AS n_docs, CAST(sum(n_chars) AS BIGINT) AS sum_chars
   FROM documents GROUP BY 1, 2
 )
 SELECT lang, split, n_docs, sum_chars,

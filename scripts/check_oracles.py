@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Self-check: run every `queries()` entry against its `oracle_sql()` twin,
 mirroring the driver's CORRECTNESS gate (row count + column names +
-order-insensitive values) at a given sf dir.
+order-insensitive values, dtype-strict) at a given sf dir.
 
 Usage: python scripts/check_oracles.py [sf_dir] [query ...]
 """
@@ -12,8 +12,6 @@ import os
 import sys
 
 import duckdb
-import numpy as np
-import pandas as pd
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -32,33 +30,12 @@ def duck_conn(sf_dir: str):
     return con
 
 
-def canon(df: pd.DataFrame) -> pd.DataFrame:
-    df = df.reindex(sorted(df.columns), axis=1)
-    out = {}
-    for c in df.columns:
-        s = df[c]
-        if pd.api.types.is_float_dtype(s):
-            out[c] = np.round(s.astype("float64"), 6)
-        elif pd.api.types.is_datetime64_any_dtype(s):
-            # normalize the unit too: Spark toPandas gives ns, DuckDB
-            # fetchdf gives us, and assert_frame_equal compares the raw
-            # int64 representations even with check_dtype=False
-            out[c] = pd.to_datetime(s).dt.tz_localize(None).astype("datetime64[ns]")
-        elif s.dtype == object:
-            out[c] = s.apply(
-                lambda v: tuple(v) if isinstance(v, (list, np.ndarray)) else v
-            )
-        else:
-            out[c] = s
-    df = pd.DataFrame(out)
-    return df.sort_values(by=list(df.columns), ignore_index=True, key=lambda s: s.astype(str))
-
-
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
     import __spark_entry__ as e
+    from foundry_es_spark.queries.common import oracle_mismatches
     from foundry_es_spark.session import get_spark
 
     spark = get_spark(master="local[16]", shuffle_partitions=16)
@@ -85,23 +62,12 @@ def main() -> None:
             print(f"FAIL {name}: duckdb raised {type(ex).__name__}: {ex}")
             n_fail += 1
             continue
-        if sorted(got.columns) != sorted(exp.columns):
-            print(f"FAIL {name}: columns {sorted(got.columns)} vs {sorted(exp.columns)}")
+        problems = oracle_mismatches(got, exp)
+        if problems:
+            print(f"FAIL {name}: {'; '.join(problems)}")
             n_fail += 1
-            continue
-        if len(got) != len(exp):
-            print(f"FAIL {name}: rows {len(got)} vs {len(exp)}")
-            n_fail += 1
-            continue
-        g, x = canon(got), canon(exp)
-        try:
-            pd.testing.assert_frame_equal(
-                g, x, check_dtype=False, check_exact=False, rtol=1e-4, atol=1e-6
-            )
+        else:
             n_pass += 1
-        except AssertionError as ex:
-            print(f"FAIL {name}: values differ: {str(ex).splitlines()[-1] if str(ex) else ex}")
-            n_fail += 1
     print(f"\n{n_pass} pass, {n_fail} fail, {n_rowsonly} rows-only")
     sys.exit(1 if n_fail else 0)
 

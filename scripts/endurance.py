@@ -112,7 +112,6 @@ def main() -> None:
         table_dir=table_dir,
         n_buckets=64,
         files_per_bucket=2,
-        merge_mode="mor",
         normalize=False,
         fused_write=True,
         hot_bucket_salts=8,

@@ -124,11 +124,12 @@ def test_evolution_interacts_with_resume(spark, tmp_path):
 
 
 def test_skew_replay_with_salting(spark, tmp_path):
-    """Skew knob: one repo holds 90% of events; salted compaction + multi-
-    file hot buckets still produce oracle-exact state (C4), AND no
-    compaction partition straggles (SURVEY §5.2: max task duration must
-    stay within 4x the median over loaded partitions — the per-partition
-    evidence rides in the epoch's lineage record)."""
+    """Skew knob: one repo holds 90% of events; salting its bucket over
+    ``files_per_bucket`` compaction partitions (C4) still produces
+    oracle-exact state, AND no compaction partition straggles (SURVEY
+    §5.2: max task duration must stay within 4x the median over loaded
+    partitions — the per-partition evidence rides in the epoch's lineage
+    record)."""
     from foundry_es_spark.fixtures import gen_change_events
     from foundry_es_spark.oracle import fold_events
 
@@ -142,7 +143,6 @@ def test_skew_replay_with_salting(spark, tmp_path):
         PipelineConfig(
             pipeline_id="skew",
             table_dir=str(tmp_path / "table"),
-            salt_partitions=8,
             files_per_bucket=4,
             record_partition_metrics=True,
             # small epochs: force a real multi-task grid (1000-row epochs /

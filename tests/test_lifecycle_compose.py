@@ -144,8 +144,7 @@ def test_multi_source_lifecycle_compose(spark, tmp_path_factory, log):
         return RoutedPipeline(
             spark,
             PipelineConfig(pipeline_id="rp", table_dir="", n_buckets=4,
-                           normalize=False, merge_mode="mor",
-                           compact_threshold=3),
+                           normalize=False, compact_threshold=3),
             routes,
         )
 
@@ -183,7 +182,7 @@ def test_multi_source_lifecycle_compose(spark, tmp_path_factory, log):
         rh = CdcPipeline(
             spark,
             PipelineConfig(pipeline_id="rh-a", table_dir=f"{tmp}/ta",
-                           n_buckets=4, normalize=False, merge_mode="mor",
+                           n_buckets=4, normalize=False,
                            compact_threshold=3),
         )
         live = rh.table.read()

@@ -1,17 +1,22 @@
-"""Merge-on-read delta mode: equivalence with copy-on-write + compaction.
+"""Merge-on-read delta mode: equivalence with the fold oracle + compaction.
 
 The MoR path (LakeTable.append_delta + read-time generation merge +
 selective bucket compaction) is the 10^10-event scale strategy; these tests
-pin that it is a pure physical-layout change — byte-identical final state
-with the CoW MERGE path, across resume and compaction boundaries.
+pin that it reproduces the independent pandas fold oracle, and that
+compaction is a pure physical-layout change — identical state on every
+column, across resume and compaction boundaries.
 """
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import functions as F
 
 from foundry_es_spark.fixtures import gen_change_events, write_event_log
+from foundry_es_spark.oracle import fold_events
 from foundry_es_spark.plans import CdcPipeline, PipelineConfig
+
+ORACLE_COLS = ["repo", "path", "commit", "lang", "content_sha256"]
 
 
 def _digest(df):
@@ -34,26 +39,40 @@ def _replay(spark, tmp, name, events_dir, **cfg):
     return pipe
 
 
-def test_mor_equals_cow_final_state(spark, tmp_path):
+def _assert_matches_oracle(pipe, events):
+    got = (
+        pipe.table.read()
+        .select(*ORACLE_COLS)
+        .toPandas()
+        .sort_values(["repo", "path"])
+        .reset_index(drop=True)
+    )
+    exp = fold_events(events.toPandas())[ORACLE_COLS].reset_index(drop=True)
+    pd.testing.assert_frame_equal(got, exp)
+
+
+def test_mor_compaction_is_pure_layout_change(spark, tmp_path):
     tmp = str(tmp_path)
     ev = gen_change_events(spark, n_events=6000, n_keys=900, hot_frac=0.3)
     write_event_log(ev, f"{tmp}/events", epoch_size=1000)
 
-    cow = _replay(spark, tmp, "cow", f"{tmp}/events", merge_mode="cow")
-    mor = _replay(spark, tmp, "mor", f"{tmp}/events", merge_mode="mor", compact_threshold=3)
-    assert _digest(cow.table.read()) == _digest(mor.table.read())
+    mor = _replay(spark, tmp, "mor", f"{tmp}/events", compact_threshold=3)
+    _assert_matches_oracle(mor, ev)
     # compaction actually ran and bounded the per-bucket delta generations
     gens = mor.table.bucket_delta_generations()
     assert max(gens.values(), default=0) < 3
+    # ... and changed nothing but the layout, on every column (meta, dats,
+    # n_lines, ... — not just the oracle's columns)
+    flat = _replay(spark, tmp, "flat", f"{tmp}/events", compact_threshold=10**9)
+    assert _digest(mor.table.read()) == _digest(flat.table.read())
 
 
 def test_mor_without_compaction_still_correct(spark, tmp_path):
     tmp = str(tmp_path)
     ev = gen_change_events(spark, n_events=4000, n_keys=500)
     write_event_log(ev, f"{tmp}/events", epoch_size=800)
-    cow = _replay(spark, tmp, "cow", f"{tmp}/events", merge_mode="cow")
-    mor = _replay(spark, tmp, "mor", f"{tmp}/events", merge_mode="mor", compact_threshold=10**9)
-    assert _digest(cow.table.read()) == _digest(mor.table.read())
+    mor = _replay(spark, tmp, "mor", f"{tmp}/events", compact_threshold=10**9)
+    _assert_matches_oracle(mor, ev)
     # generations really did pile up (delta files present)
     assert any(f.get("delta") for f in mor.table._current()["files"])
 
@@ -66,7 +85,7 @@ def test_mor_read_plan_has_no_exchange(spark, tmp_path):
     tmp = str(tmp_path)
     ev = gen_change_events(spark, n_events=3000, n_keys=400)
     write_event_log(ev, f"{tmp}/events", epoch_size=500)
-    mor = _replay(spark, tmp, "plan", f"{tmp}/events", merge_mode="mor", compact_threshold=10**9)
+    mor = _replay(spark, tmp, "plan", f"{tmp}/events", compact_threshold=10**9)
     assert any(f.get("delta") for f in mor.table._current()["files"])  # deltas live
     df = mor.table.read()
     plan = df._jdf.queryExecution().executedPlan().toString()
@@ -82,7 +101,7 @@ def test_mor_read_cost_flat_in_generations(spark, tmp_path):
     tmp = str(tmp_path)
     ev = gen_change_events(spark, n_events=4000, n_keys=300)
     write_event_log(ev, f"{tmp}/events", epoch_size=400)  # 10 generations
-    mor = _replay(spark, tmp, "flat", f"{tmp}/events", merge_mode="mor", compact_threshold=10**9)
+    mor = _replay(spark, tmp, "flat", f"{tmp}/events", compact_threshold=10**9)
     gens = mor.table.bucket_delta_generations()
     assert max(gens.values(), default=0) >= 5
     plan = mor.table.read()._jdf.queryExecution().executedPlan().toString()
@@ -144,7 +163,7 @@ def test_mor_resume_mid_stream(spark, tmp_path):
     ev = gen_change_events(spark, n_events=5000, n_keys=700)
     write_event_log(ev, f"{tmp}/events", epoch_size=1000)
 
-    cfg = dict(merge_mode="mor", compact_threshold=3)
+    cfg = dict(compact_threshold=3)
     pipe = _replay(spark, tmp, "resume", f"{tmp}/events", **cfg)
     full = _digest(pipe.table.read())
 
@@ -191,7 +210,7 @@ def test_ranged_merge_boundary_edge_update(spark, tmp_path, monkeypatch):
     pipe = CdcPipeline(
         spark,
         PipelineConfig(pipeline_id="edge", table_dir=f"{tmp}/t", n_buckets=1,
-                       merge_mode="mor", compact_threshold=10**9),
+                       compact_threshold=10**9),
     )
     pipe.replay_event_dir(f"{tmp}/events")
     pipe.table.compact_buckets([0])  # one key-sorted base file, 40-row groups

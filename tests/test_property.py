@@ -2,8 +2,7 @@
 the committed golden digest (item 3).
 
 The hypothesis test generates adversarial event logs — key collisions,
-delete/re-insert cycles, arbitrary epoch boundaries, every compaction
-strategy — and checks the engine's final state against the pure-pandas
+delete/re-insert cycles, arbitrary epoch boundaries — and checks the engine's final state against the pure-pandas
 fold oracle, which shares no code with the engine.
 """
 
@@ -33,8 +32,7 @@ EVENT_ST = st.tuples(
 def event_logs(draw):
     evs = draw(st.lists(EVENT_ST, min_size=1, max_size=60))
     n_epochs = draw(st.integers(1, 3))
-    strategy = draw(st.sampled_from(["sorted", "winners", "agg"]))
-    return evs, n_epochs, strategy
+    return evs, n_epochs
 
 
 @settings(
@@ -44,7 +42,7 @@ def event_logs(draw):
 )
 @given(event_logs())
 def test_replay_matches_fold_oracle(spark, tmp_path_factory, log):
-    evs, n_epochs, strategy = log
+    evs, n_epochs = log
     tmp = str(tmp_path_factory.mktemp("prop"))
     rows = []
     for seq, (ri, pi, op, text) in enumerate(evs):
@@ -73,7 +71,6 @@ def test_replay_matches_fold_oracle(spark, tmp_path_factory, log):
             pipeline_id="p",
             table_dir=f"{tmp}/t",
             n_buckets=4,
-            compact_strategy=strategy,
         ),
     )
     per_epoch = max(1, (len(rows) + n_epochs - 1) // n_epochs)
@@ -269,7 +266,6 @@ def test_lifecycle_chaos_matches_fold_oracle(spark, tmp_path_factory, log):
                 pipeline_id="p",
                 table_dir=f"{tmp}/t",
                 n_buckets=4,
-                merge_mode="mor",
                 compact_threshold=2,
             ),
         )

@@ -2,16 +2,17 @@
 on Spark AND (when an oracle exists) on DuckDB over the same parquet;
 results must match after column-name sort + row sort — the same shape as
 the driver's order-insensitive value-hash (driver contract,
-__spark_entry__.py docstring)."""
+__spark_entry__.py docstring) — with dtypes compared strictly
+(queries.common.oracle_mismatches)."""
 
-import math
 import os
 
 import duckdb
-import pandas as pd
 import pytest
 
 from foundry_es_spark.queries import all_oracles, all_queries
+from foundry_es_spark.queries.analytics import STRATIFIED_SPLIT_SQL
+from foundry_es_spark.queries.common import oracle_mismatches
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 TABLES = [
@@ -30,28 +31,6 @@ def ddb():
     return con
 
 
-def _normalize(df: pd.DataFrame) -> pd.DataFrame:
-    df = df.reindex(sorted(df.columns), axis=1)
-    for c in df.columns:
-        if df[c].dtype == object:
-            df[c] = df[c].map(
-                lambda v: tuple(v) if isinstance(v, (list, tuple)) else v
-            )
-        if "datetime" in str(df[c].dtype):
-            df[c] = pd.to_datetime(df[c]).dt.tz_localize(None)
-    return df.sort_values(list(df.columns), kind="mergesort").reset_index(drop=True)
-
-
-def _values_equal(a, b) -> bool:
-    if a is b:
-        return True
-    if pd.isna(a) and pd.isna(b):
-        return True
-    if isinstance(a, float) and isinstance(b, float):
-        return math.isclose(a, b, rel_tol=1e-9, abs_tol=1e-9)
-    return a == b
-
-
 QUERIES = all_queries()
 ORACLES = all_oracles()
 
@@ -66,14 +45,21 @@ def test_query_vs_oracle(spark, ddb, name):
         assert len(got) == len(again)
         return
     exp = ddb.execute(ORACLES[name]).fetchdf()
-    g, e = _normalize(got), _normalize(exp)
-    assert sorted(g.columns) == sorted(e.columns), (
-        f"{name}: column mismatch {list(g.columns)} vs {list(e.columns)}"
-    )
-    assert len(g) == len(e), f"{name}: row count {len(g)} vs {len(e)}"
-    for c in g.columns:
-        ga, ea = g[c].tolist(), e[c].tolist()
-        bad = [
-            (i, x, y) for i, (x, y) in enumerate(zip(ga, ea)) if not _values_equal(x, y)
-        ]
-        assert not bad, f"{name}.{c}: first mismatches {bad[:5]}"
+    problems = oracle_mismatches(got, exp)
+    assert not problems, f"{name}: {problems}"
+
+
+def test_comparator_rejects_uncast_sum(spark, ddb):
+    """DuckDB's sum(BIGINT) is HUGEINT, which reaches pandas as float64:
+    an oracle twin without the BIGINT cast equals Spark's bigint column
+    value for value but not to the CORRECTNESS board's hash, so it must
+    FAIL here."""
+    cast = "CAST(sum(n_chars) AS BIGINT) AS sum_chars"
+    assert cast in STRATIFIED_SPLIT_SQL
+    got = QUERIES["sample_stratified_split"](spark, SF_DIR).toPandas()
+    uncast = ddb.execute(
+        STRATIFIED_SPLIT_SQL.replace(cast, "sum(n_chars) AS sum_chars")
+    ).fetchdf()
+    problems = oracle_mismatches(got, uncast)
+    assert problems and problems[0].startswith("sum_chars: dtype"), problems
+    assert oracle_mismatches(got, ddb.execute(STRATIFIED_SPLIT_SQL).fetchdf()) == []

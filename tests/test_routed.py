@@ -72,3 +72,22 @@ def test_crash_between_routes_resumes_exactly_once(spark, tmp_path):
     )
     clean.replay_event_dir(f"{tmp}/events")
     assert _rows(rp.table("all").read()) == _rows(clean.table("all").read())
+
+
+def test_routed_replay_skips_fully_fenced_epochs(spark, tmp_path):
+    from foundry_es_spark.fixtures import gen_change_events, write_event_log
+    from foundry_es_spark.plans.routed import Route, RoutedPipeline
+
+    tmp = str(tmp_path)
+    ev = gen_change_events(spark, n_events=400, n_keys=60, lines_mod=10)
+    write_event_log(ev, f"{tmp}/events", epoch_size=200)
+    rp = RoutedPipeline(
+        spark,
+        PipelineConfig(pipeline_id="fan", table_dir="", n_buckets=2, normalize=False),
+        [Route("all", "true", f"{tmp}/t_all")],
+    )
+    first = rp.replay_event_dir(f"{tmp}/events")
+    assert all(not r.get("skipped") for r in first)
+    again = rp.replay_event_dir(f"{tmp}/events")
+    assert [r["skipped"] for r in again] == [True, True]
+    assert rp.table("all").read().count() > 0
