@@ -509,8 +509,7 @@ def main() -> None:
         # pipeline also pays (the r2 table carries the nested dats column
         # the r1 table lacked).
         replication = run_replay(
-            spark, events_dir, os.path.join(BENCH_ROOT, "table_repl"),
-            normalize=False, fused_write=True,
+            spark, events_dir, os.path.join(BENCH_ROOT, "table_repl"), normalize=False
         )
         streaming = run_streaming_replay(
             spark, events_dir, os.path.join(BENCH_ROOT, "table_stream")

@@ -14,6 +14,7 @@ are exposed back as DataFrames via :meth:`CdcPipeline.lineage` /
 from __future__ import annotations
 
 import os
+import shutil
 import time
 from contextlib import contextmanager
 from dataclasses import dataclass, field
@@ -28,6 +29,8 @@ from foundry_es_spark.functions.normalize import (
 )
 from foundry_es_spark.lake import LakeTable
 from foundry_es_spark.lake import log as commitlog
+from foundry_es_spark.lake.backend import supports_fused_sink
+from foundry_es_spark.lake.table import _fields_to_struct, bucket_expr
 from foundry_es_spark.operators.cdc import (
     compact_latest_patch,
     compact_sorted_partitions,
@@ -35,6 +38,7 @@ from foundry_es_spark.operators.cdc import (
     validate_split,
     validity_expr,
 )
+from foundry_es_spark.operators.metrics import partition_metrics_acc, summarize_partitions
 from foundry_es_spark.schema import BASE_SCHEMA, KEY_COLS
 
 # Envelope columns that never become table columns.
@@ -172,24 +176,15 @@ class PipelineConfig:
     n_parts: int = 8                 # stream partitions for offset tracking
     files_per_bucket: int = 1        # >1 parallelizes writes of hot buckets
     normalize: bool = True           # T1/T2 enhancement stage
-    suppress_no_ops: bool = False    # C3 (extra state read per epoch)
+    suppress_no_ops: bool = False    # C3 (extra state read per epoch; JVM writer)
     rename_map: dict[str, str] = field(default_factory=dict)  # C7 declared renames
     compact_threshold: int = 8       # compact a bucket once it holds this many delta generations
     record_partition_metrics: bool = False  # §5.2 straggler evidence in lineage
-    fused_write: bool | str = "auto" # tasks write the delta parquet directly
-                                     # (Iceberg task-writer shape; no JVM re-encode, no
-                                     # output committer). "auto" = only when normalize is
-                                     # off: the fused sink needs the derived columns
-                                     # computed BEFORE the compaction exchange, and
-                                     # shipping dats/sha through the shuffle costs more
-                                     # than the fused write saves (measured ~+1.5s vs
-                                     # -0.4s per 100k epoch); replication-shape epochs
-                                     # (no enrichment) run ~25% faster fused.
     compact_rows_per_task: int = 50_000  # target rows per compaction task
                                          # (sets explicit partition count = rows/target,
                                          # clamped to the (bucket x salt) grid)
     hot_bucket_salts: int = 0        # C4 adaptive: buckets whose input-row share in the
-                                     # PREVIOUS epoch exceeded hot_bucket_factor x median
+                                     # PREVIOUS epoch exceeded HOT_BUCKET_FACTOR x median
                                      # salt over this many slices (0 = flat salting only).
                                      # Bucket = hash(repo): one hot repo's 10-20% payload
                                      # otherwise sits in files_per_bucket tasks — a
@@ -198,7 +193,6 @@ class PipelineConfig:
                                      # accumulator channel: no extra Spark job, and the
                                      # final table state is identical for any value
                                      # (salt only shapes task sizing / file counts).
-    hot_bucket_factor: float = 4.0   # hotness threshold vs the median loaded bucket
     audit_fn: object | None = None   # Write-Audit-Publish hook: callable
                                      # (staged_df, ctx) -> bool run on the epoch's
                                      # staged rows BEFORE the publishing commit.
@@ -254,6 +248,11 @@ class PipelineConfig:
                                      # SAME epoch body against Iceberg MERGE INTO /
                                      # ALTER TABLE SQL; table_dir then only hosts the
                                      # pipeline's system dirs (dead-letter quarantine).
+
+
+# C4 adaptive salting: a bucket is hot when its input rows last epoch
+# exceeded this multiple of the median loaded bucket (CdcPipeline._hot_buckets).
+HOT_BUCKET_FACTOR = 4.0
 
 
 class CdcPipeline:
@@ -341,13 +340,11 @@ class CdcPipeline:
         row counts, or None when adaptive salting is off."""
         if self.cfg.hot_bucket_salts <= 0:
             return None
-        from foundry_es_spark.operators.metrics import partition_metrics_acc
-
         return partition_metrics_acc(self.spark)
 
     def _hot_buckets(self) -> list[int]:
         """Buckets whose input-row share last epoch exceeded
-        ``hot_bucket_factor`` x the median loaded bucket. Driver-side pure
+        ``HOT_BUCKET_FACTOR`` x the median loaded bucket. Driver-side pure
         arithmetic over <= n_buckets counters; deterministic given the
         event stream, so replays reproduce the same salt layout."""
         if self.cfg.hot_bucket_salts <= 0 or len(self._bucket_rows) < 2:
@@ -355,7 +352,7 @@ class CdcPipeline:
         import statistics
 
         med = statistics.median(self._bucket_rows.values())
-        cut = self.cfg.hot_bucket_factor * max(1, med)
+        cut = HOT_BUCKET_FACTOR * max(1, med)
         return sorted(b for b, r in self._bucket_rows.items() if r > cut)
 
     def _fold_bucket_acc(self, acc) -> None:
@@ -386,8 +383,6 @@ class CdcPipeline:
         a table scan. Orphan patches — key absent or tombstoned — are no-ops
         (Debezium semantics), dropped and counted by an Observation riding
         the merge job (``n_orphan_patches`` in the epoch's lineage info)."""
-        from foundry_es_spark.lake.table import bucket_expr
-
         base = compacted.where(F.col("op") != "P")
         patches = compacted.where(F.col("op") == "P")
         touched = [
@@ -490,7 +485,6 @@ class CdcPipeline:
         if offsets_hint is not None:
             # Offsets are raw consumed stream positions (C5/C6), so footer
             # row-counts/min-max are exact regardless of validity.
-            pre_rows = None
             offsets = offsets_hint["offsets"]
             n_events = int(offsets_hint["n_events"])  # raw rows incl. invalid
             min_seq, max_seq = offsets_hint["min_seq"], offsets_hint["max_seq"]
@@ -533,7 +527,7 @@ class CdcPipeline:
         valid = batch.where(ok)
         stage_sec["prescan"] = round(time.monotonic() - t0, 3)
 
-        base_info = {
+        info = {
             "pipeline_id": self.cfg.pipeline_id,
             "epoch": int(epoch_id),
             "n_events": int(n_events),
@@ -542,103 +536,11 @@ class CdcPipeline:
             "max_seq": max_seq,
             "offsets": offsets,
         }
-        fw = self.cfg.fused_write
-        from foundry_es_spark.lake.backend import supports_fused_sink
-
-        if (
-            (fw is True or (fw == "auto" and not self.cfg.normalize))
-            and not self.cfg.suppress_no_ops
-            and not self.cfg.patch_ops
-            and supports_fused_sink(table)
-            and n_events > 0
-        ):
-            return self._apply_epoch_fused(
-                table, raw_batch, valid, epoch_id, n_events, base_info,
-                offsets_hint, obs_pre, t0, stage_sec, nb,
-            )
-
-        # C1+C2 (operators/cdc.py): the payload crosses the exchange once,
-        # straight into the sink's (bucket, salt) write layout.
-        part_acc = None
-        bucket_acc = None
-        if self.cfg.patch_ops:
-            # patch fold: a one-shuffle, map-side combinable hash aggregate;
-            # the sorted/fused layouts don't apply because net-'P' keys take
-            # a join against the stored rows before they are full rows at all.
-            compacted = compact_latest_patch(valid)
-        else:
-            if self.cfg.record_partition_metrics:
-                from foundry_es_spark.operators.metrics import partition_metrics_acc
-
-                part_acc = partition_metrics_acc(self.spark)
-            bucket_acc = self._bucket_acc()
-            compacted = compact_sorted_partitions(
-                valid,
-                nb,
-                self.cfg.files_per_bucket,
-                emit_meta=self.cfg.normalize,
-                metrics_acc=part_acc,
-                num_partitions=self._compact_partitions(n_events),
-                hot_buckets=self._hot_buckets(),
-                hot_salts=self.cfg.hot_bucket_salts,
-                bucket_acc=bucket_acc,
-            )
-        pre_partitioned = not self.cfg.patch_ops
 
         # C7 — evolve the table to accept this batch's payload shape.
         payload_fields = [f for f in batch.schema.fields if f.name not in ENVELOPE_COLS]
         table.evolve_for_batch(T.StructType(payload_fields), self.cfg.rename_map)
 
-        patch_obs = None
-        if self.cfg.patch_ops and self.cfg.patch_resolve == "write":
-            # C2 patch resolution: keys whose base image lives in an
-            # EARLIER epoch (net op 'P') coalesce their unset columns from
-            # the stored row — BEFORE enhancement, so derived columns
-            # (digest, DATS) recompute over the resolved full row.
-            # (patch_resolve='merge' skips this entirely: net-P rows land
-            # as sparse delta rows and every bucket-local merge folds them
-            # column-wise — no stored read in the epoch at all.)
-            compacted, patch_obs = self._resolve_patches(table, valid, compacted, nb)
-
-        # T1/T2/T3 — enhancement on the compacted survivors only (far
-        # fewer rows than the raw batch when keys are updated repeatedly).
-        enriched = with_normalized_columns(compacted) if self.cfg.normalize else compacted
-
-        user_fields = table.schema_fields()
-        select = []
-        for uf in user_fields:
-            if uf.name in enriched.columns:
-                select.append(F.col(uf.name).cast(uf.type).alias(uf.name))
-            else:
-                select.append(F.lit(None).cast(uf.type).alias(uf.name))
-        merge_batch = enriched.select(
-            *select,
-            F.col("seq").alias("_seq"),
-            F.col("op").alias("_op"),
-        )
-
-        if self.cfg.suppress_no_ops:
-            # C3's state read is bucket-pruned: the comparison only needs
-            # rows whose bucket the batch touches — one narrow distinct
-            # over bucket ids (<= n_buckets values) instead of a full
-            # table read per epoch. Derived from the RAW valid batch, not
-            # merge_batch: bucket is a function of repo alone and
-            # compaction adds no keys, while a distinct over merge_batch
-            # would execute the whole compaction plan (mapInArrow is a
-            # projection barrier) as an extra job.
-            from foundry_es_spark.lake.table import bucket_expr
-
-            touched = [
-                r[0]
-                for r in valid.select(
-                    bucket_expr(nb).alias("b")
-                ).distinct().collect()
-            ]
-            merge_batch = suppress_unchanged(
-                merge_batch, table.read_internal(buckets=touched)
-            )
-
-        info = base_info
         if n_events == 0:
             # nothing to merge — still fence the epoch atomically via a
             # metadata-only commit.
@@ -649,55 +551,38 @@ class CdcPipeline:
             )
             return {**info, "skipped": False, "buckets_rewritten": 0}
 
-        if self.cfg.audit_fn is not None:
-            # WAP on the JVM path: audit the exact rows that would publish.
-            # The audit action re-executes the epoch plan once (no staged
-            # files to reuse here — the fused path audits those instead).
-            if not self.cfg.audit_fn(
-                merge_batch, {"epoch_id": epoch_id, "n_events": n_events}
-            ):
-                raise AuditFailed(
-                    f"epoch {epoch_id}: audit_fn rejected the batch; "
-                    "nothing was published"
-                )
+        # C1+C2 (operators/cdc.py): the payload crosses the exchange once,
+        # straight into the sink's (bucket, salt) write layout. The patch
+        # fold (below) takes neither accumulator.
+        part_acc = bucket_acc = None
+        if not self.cfg.patch_ops:
+            if self.cfg.record_partition_metrics:
+                part_acc = partition_metrics_acc(self.spark)
+            bucket_acc = self._bucket_acc()
 
-        # The whole epoch — compaction shuffle, Arrow-vectorized enhancement,
-        # bucket shuffle, sorted parquet write — executes as ONE Spark job;
-        # merge stats ride on Observations instead of a second
-        # materialization (no persist, no duplicate shuffle).
-        t2 = time.monotonic()
-        obs = Observation()
-        merge_batch = merge_batch.observe(
-            obs,
-            F.count(F.lit(1)).alias("n_keys"),
-            F.sum((F.col("_op") == "D").cast("int")).alias("n_deletes"),
-        )
+        def kernel(df: DataFrame, **sink) -> DataFrame:
+            return compact_sorted_partitions(
+                df,
+                nb,
+                self.cfg.files_per_bucket,
+                emit_meta=self.cfg.normalize,
+                metrics_acc=part_acc,
+                num_partitions=self._compact_partitions(n_events),
+                hot_buckets=self._hot_buckets(),
+                hot_salts=self.cfg.hot_bucket_salts,
+                bucket_acc=bucket_acc,
+                **sink,
+            )
 
-        info_out: dict = {}
+        committed: dict = {}
 
-        def _info() -> dict:
-            # Runs between the main write job and the commit-log write (the
-            # sink invokes it post-write, pre-commit). The S7 quarantine for
-            # the footer-hint path happens HERE so a crash after the fencing
-            # commit can never lose dead letters (the epoch would be skipped
-            # on resume and `_sys/errors/epoch=N` never written).
-            vals = observed_metrics(obs, n_keys=0, n_deletes=0)
-            # the main job has finished by now — record its wall so the
-            # lineage row carries the write stage (the outer assignment
-            # after append_delta/merge_upsert would be too late for the
-            # committed epoch_info copy)
-            stage_sec["merge_write"] = round(time.monotonic() - t2, 3)
-            out = {
-                **info,
-                "n_keys": int(vals["n_keys"]),
-                "n_deletes": int(vals["n_deletes"] or 0),
-                "wall_sec": time.monotonic() - t0,
-                "stage_sec": stage_sec,
-            }
-            if part_acc is not None:
-                from foundry_es_spark.operators.metrics import summarize_partitions
-
-                out["partition_metrics"] = summarize_partitions(part_acc.value)
+        def commit_info(n_keys: int, n_deletes: int, patch_obs=None) -> dict:
+            # The epoch's commit record. Runs after the write job and
+            # BEFORE the fencing commit, so the S7 quarantine of the
+            # footer-hint path happens here: a crash after the commit can
+            # never lose dead letters (the epoch would be skipped on
+            # resume and `_sys/errors/epoch=N` never written).
+            out = {**info, "n_keys": n_keys, "n_deletes": n_deletes}
             if obs_pre is not None:
                 n_dead = int(observed_metrics(obs_pre, n_dead=0)["n_dead"] or 0)
                 if n_dead:
@@ -711,159 +596,209 @@ class CdcPipeline:
                     ]
                     or 0
                 )
-            info_out.update(out)
+            out["wall_sec"] = time.monotonic() - t0
+            out["stage_sec"] = stage_sec
+            if part_acc is not None:
+                out["partition_metrics"] = summarize_partitions(part_acc.value)
+            committed.update(out)
             return out
 
-        merge_stats = table.append_delta(
-            merge_batch,
-            fence=(self.cfg.pipeline_id, epoch_id),
-            files_per_bucket=self.cfg.files_per_bucket,
-            info=_info,
-            pre_partitioned=pre_partitioned,
-        )
-        stage_sec["merge_write"] = round(time.monotonic() - t2, 3)
-        self._fold_bucket_acc(bucket_acc)
-        info = {**info, **{k: info_out[k] for k in ("n_keys", "n_deletes", "n_dead_letters", "n_orphan_patches") if k in info_out}}
-        merge_stats = self._maybe_compact(table, merge_stats, stage_sec)
-        return {**info, **merge_stats, "stage_sec": stage_sec, "skipped": False}
-
-    def _apply_epoch_fused(
-        self, table, raw_batch, valid, epoch_id, n_events, base_info,
-        offsets_hint, obs_pre, t0, stage_sec, n_buckets: int | None = None,
-    ) -> dict:
-        """Fused epoch body (mor + sorted): ONE job whose tasks end at the
-        delta parquet files. Projection to the final table schema, sha256 /
-        DATS enrichment (JVM, pre-shuffle), the (bucket, salt) exchange,
-        Arrow dedup + meta, and the parquet encode all happen inside the
-        job; the driver collects per-file metadata and swaps the commit —
-        the Iceberg writer/commit split. No Python→JVM payload return, no
-        second encode, no rename-based committer in the epoch hot path."""
-        part_acc = None
-        if self.cfg.record_partition_metrics:
-            from foundry_es_spark.operators.metrics import partition_metrics_acc
-
-            part_acc = partition_metrics_acc(self.spark)
-
-        payload_fields = [
-            f for f in raw_batch.schema.fields if f.name not in ENVELOPE_COLS
-        ]
-        table.evolve_for_batch(T.StructType(payload_fields), self.cfg.rename_map)
-
-        enriched = (
-            with_normalized_columns(valid, include_meta=False)
-            if self.cfg.normalize
-            else valid
-        )
-        select = []
-        for uf in table.schema_fields():
-            if self.cfg.normalize and uf.name == "meta":
-                continue  # the compaction kernel appends meta in its Arrow pass
-            if uf.name in enriched.columns:
-                select.append(F.col(uf.name).cast(uf.type).alias(uf.name))
+        fence = (self.cfg.pipeline_id, epoch_id)
+        # The sink is chosen from the epoch, not configured: the fused
+        # task-writer sink whenever the rows are final before the kernel
+        # and the backend has a task writer. It beat the JVM writer with
+        # and without enrichment (median 6k-event epoch on 4 vCPU: 1.74 s
+        # vs 2.20 s enriched, 1.22 s vs 1.58 s not). C3 suppression and
+        # patch resolution run after the kernel, so they take the JVM
+        # writer, as do backends without begin/commit_delta_files (Iceberg).
+        if (
+            not self.cfg.suppress_no_ops
+            and not self.cfg.patch_ops
+            and supports_fused_sink(table)
+        ):
+            # Fused task-writer sink: ONE job whose tasks end at the delta
+            # parquet files. Projection to the table schema and the
+            # JVM-native enrichment columns (sha256, counts, lang, dats) run
+            # before the (bucket, salt) exchange; Arrow dedup, `meta` and
+            # the parquet encode run inside the kernel; the driver collects
+            # per-file metadata and swaps the commit — the Iceberg
+            # writer/commit split. No Python→JVM payload return, no second
+            # encode, no rename-based committer in the epoch hot path.
+            #
+            # Schema version the write job runs under (post-evolve) —
+            # passed to commit_delta_files as `expect` so the committed
+            # file metadata matches what was physically written, even if
+            # a concurrent writer evolves or rebuckets before the commit.
+            write_sv = int(table._current()["schema_version"])
+            version, rel = table.begin_delta_version()
+            if self.cfg.normalize:
+                # the kernel appends `meta` in its Arrow pass
+                rows = self._to_table_schema(
+                    table, with_normalized_columns(valid, include_meta=False),
+                    skip=("meta",),
+                )
             else:
-                select.append(F.lit(None).cast(uf.type).alias(uf.name))
-        merge_batch = enriched.select(
-            *select, F.col("seq").alias("_seq"), F.col("op").alias("_op")
-        )
+                rows = self._to_table_schema(table, valid)
+            t2 = time.monotonic()
+            file_rows = kernel(
+                rows,
+                order_col="_seq",
+                sink_spec={
+                    "abs_dir": os.path.join(self.cfg.table_dir, rel),
+                    "rel": rel,
+                    "codec": "zstd",
+                },
+            ).collect()  # the epoch's one job
+            stage_sec["merge_write"] = round(time.monotonic() - t2, 3)
 
-        nb = n_buckets if n_buckets is not None else int(
-            getattr(table, "n_buckets", 0) or self.cfg.n_buckets
-        )
-        # schema version the write job runs under (post-evolve) — passed to
-        # commit_delta_files as `expect` so the committed file metadata
-        # matches what was physically written, even if a concurrent writer
-        # evolves or rebuckets between the write and the commit
-        write_sv = int(table._current()["schema_version"])
-        version, rel = table.begin_delta_version()
-        t2 = time.monotonic()
-        bucket_acc = self._bucket_acc()
-        meta_df = compact_sorted_partitions(
-            merge_batch,
-            nb,
-            self.cfg.files_per_bucket,
-            order_col="_seq",
-            emit_meta=self.cfg.normalize,
-            metrics_acc=part_acc,
-            num_partitions=self._compact_partitions(n_events),
-            sink_spec={
-                "abs_dir": os.path.join(self.cfg.table_dir, rel),
-                "rel": rel,
-                "codec": "zstd",
-            },
-            hot_buckets=self._hot_buckets(),
-            hot_salts=self.cfg.hot_bucket_salts,
-            bucket_acc=bucket_acc,
-        )
-        file_rows = meta_df.collect()  # the epoch's one job
-        stage_sec["merge_write"] = round(time.monotonic() - t2, 3)
-        self._fold_bucket_acc(bucket_acc)
+            if self.cfg.audit_fn is not None and file_rows:
+                # True Write-Audit-Publish: data files are staged under the
+                # reserved (uncommitted) version dir; the audit reads THEM —
+                # no recompute — and only a pass releases the metadata swap.
+                t_aud = time.monotonic()
+                staged = self.spark.read.schema(
+                    _fields_to_struct(table.schema_fields(), with_sys=True)
+                ).parquet(*[
+                    os.path.join(self.cfg.table_dir, r["path"]) for r in file_rows
+                ])
+                passed = self.cfg.audit_fn(
+                    staged, {"epoch_id": epoch_id, "n_events": n_events}
+                )
+                stage_sec["audit"] = round(time.monotonic() - t_aud, 3)
+                if not passed:
+                    shutil.rmtree(
+                        os.path.join(self.cfg.table_dir, rel), ignore_errors=True
+                    )
+                    raise AuditFailed(
+                        f"epoch {epoch_id}: audit_fn rejected the staged files; "
+                        "version dir discarded, nothing was published"
+                    )
 
-        if self.cfg.audit_fn is not None and file_rows:
-            # True Write-Audit-Publish: data files are staged under the
-            # reserved (uncommitted) version dir; the audit reads THEM —
-            # no recompute — and only a pass releases the metadata swap.
-            from foundry_es_spark.lake.table import _fields_to_struct
-
-            t_aud = time.monotonic()
-            staged = self.spark.read.schema(
-                _fields_to_struct(table.schema_fields(), with_sys=True)
-            ).parquet(*[
-                os.path.join(self.cfg.table_dir, r["path"]) for r in file_rows
-            ])
-            ok = self.cfg.audit_fn(
-                staged, {"epoch_id": epoch_id, "n_events": n_events}
+            merge_stats = table.commit_delta_files(
+                version,
+                [
+                    {"path": r["path"], "bucket": r["bucket"], "rows": r["rows"],
+                     "rmin": r["rmin"], "rmax": r["rmax"], "kfp": r["kfp"]}
+                    for r in file_rows
+                ],
+                fence=fence,
+                info=commit_info(
+                    int(sum(r["rows"] for r in file_rows)),
+                    int(sum(r["deletes"] for r in file_rows)),
+                ),
+                # what the write job actually ran under: files must be
+                # stamped with this schema even if a concurrent evolve
+                # landed meanwhile, and a concurrent rebucket must
+                # conflict, not silently commit
+                expect={"n_buckets": nb, "schema_version": write_sv},
             )
-            stage_sec["audit"] = round(time.monotonic() - t_aud, 3)
-            if not ok:
-                import shutil as _shutil
+        else:
+            if self.cfg.patch_ops:
+                # patch fold: a one-shuffle, map-side combinable hash
+                # aggregate; the sorted layout doesn't apply because net-'P'
+                # keys take a join against the stored rows before they are
+                # full rows at all.
+                compacted = compact_latest_patch(valid)
+            else:
+                compacted = kernel(valid)
 
-                _shutil.rmtree(
-                    os.path.join(self.cfg.table_dir, rel), ignore_errors=True
+            patch_obs = None
+            if self.cfg.patch_ops and self.cfg.patch_resolve == "write":
+                # C2 patch resolution: keys whose base image lives in an
+                # EARLIER epoch (net op 'P') coalesce their unset columns
+                # from the stored row — BEFORE enhancement, so derived
+                # columns (digest, DATS) recompute over the resolved full
+                # row. (patch_resolve='merge' skips this entirely: net-P
+                # rows land as sparse delta rows and every bucket-local
+                # merge folds them column-wise — no stored read in the
+                # epoch at all.)
+                compacted, patch_obs = self._resolve_patches(table, valid, compacted, nb)
+
+            # T1/T2/T3 — enhancement on the compacted survivors only (far
+            # fewer rows than the raw batch when keys are updated repeatedly).
+            enriched = with_normalized_columns(compacted) if self.cfg.normalize else compacted
+            merge_batch = self._to_table_schema(table, enriched)
+
+            if self.cfg.suppress_no_ops:
+                # C3's state read is bucket-pruned: the comparison only
+                # needs rows whose bucket the batch touches — one narrow
+                # distinct over bucket ids (<= n_buckets values) instead of
+                # a full table read per epoch. Derived from the RAW valid
+                # batch, not merge_batch: bucket is a function of repo alone
+                # and compaction adds no keys, while a distinct over
+                # merge_batch would execute the whole compaction plan
+                # (mapInArrow is a projection barrier) as an extra job.
+                touched = [
+                    r[0]
+                    for r in valid.select(
+                        bucket_expr(nb).alias("b")
+                    ).distinct().collect()
+                ]
+                merge_batch = suppress_unchanged(
+                    merge_batch, table.read_internal(buckets=touched)
                 )
-                raise AuditFailed(
-                    f"epoch {epoch_id}: audit_fn rejected the staged files; "
-                    "version dir discarded, nothing was published"
+
+            if self.cfg.audit_fn is not None:
+                # WAP on the JVM path: audit the exact rows that would
+                # publish. The audit action re-executes the epoch plan once
+                # (no staged files to reuse here — the fused sink audits
+                # those instead).
+                if not self.cfg.audit_fn(
+                    merge_batch, {"epoch_id": epoch_id, "n_events": n_events}
+                ):
+                    raise AuditFailed(
+                        f"epoch {epoch_id}: audit_fn rejected the batch; "
+                        "nothing was published"
+                    )
+
+            # The whole epoch — compaction shuffle, Arrow-vectorized
+            # enhancement, bucket shuffle, sorted parquet write — executes
+            # as ONE Spark job; merge stats ride on Observations instead of
+            # a second materialization (no persist, no duplicate shuffle).
+            t2 = time.monotonic()
+            obs = Observation()
+            merge_batch = merge_batch.observe(
+                obs,
+                F.count(F.lit(1)).alias("n_keys"),
+                F.sum((F.col("_op") == "D").cast("int")).alias("n_deletes"),
+            )
+
+            def _info() -> dict:
+                # the sink calls this post-write, pre-commit: the main job
+                # has finished, so its wall and Observations are final
+                stage_sec["merge_write"] = round(time.monotonic() - t2, 3)
+                vals = observed_metrics(obs, n_keys=0, n_deletes=0)
+                return commit_info(
+                    int(vals["n_keys"]), int(vals["n_deletes"] or 0), patch_obs
                 )
 
-        info = {
-            **base_info,
-            "n_keys": int(sum(r["rows"] for r in file_rows)),
-            "n_deletes": int(sum(r["deletes"] for r in file_rows)),
-        }
-        # S7 quarantine BEFORE the fencing commit (crash after the commit
-        # must never lose dead letters — the epoch would be skipped on
-        # resume and the quarantine never written).
-        if offsets_hint is not None and obs_pre is not None:
-            n_dead = int(observed_metrics(obs_pre, n_dead=0)["n_dead"] or 0)
-            if n_dead:
-                from foundry_es_spark.operators.cdc import validate_split
-
-                _, dead = validate_split(raw_batch)
-                self._write_dead_letters(dead, epoch_id)
-            info["n_dead_letters"] = n_dead
-        info["wall_sec"] = time.monotonic() - t0
-        info["stage_sec"] = stage_sec
-        if part_acc is not None:
-            from foundry_es_spark.operators.metrics import summarize_partitions
-
-            info["partition_metrics"] = summarize_partitions(part_acc.value)
-
-        merge_stats = table.commit_delta_files(
-            version,
-            [
-                {"path": r["path"], "bucket": r["bucket"], "rows": r["rows"],
-                 "rmin": r["rmin"], "rmax": r["rmax"], "kfp": r["kfp"]}
-                for r in file_rows
-            ],
-            fence=(self.cfg.pipeline_id, epoch_id),
-            info=info,
-            # what the write job actually ran under: files must be stamped
-            # with this schema even if a concurrent evolve landed meanwhile,
-            # and a concurrent rebucket must conflict, not silently commit
-            expect={"n_buckets": nb, "schema_version": write_sv},
-        )
+            merge_stats = table.append_delta(
+                merge_batch,
+                fence=fence,
+                files_per_bucket=self.cfg.files_per_bucket,
+                info=_info,
+                pre_partitioned=not self.cfg.patch_ops,
+            )
+        self._fold_bucket_acc(bucket_acc)
         merge_stats = self._maybe_compact(table, merge_stats, stage_sec)
-        return {**info, **merge_stats, "stage_sec": stage_sec, "skipped": False}
+        # `info` backs a sink that never asks for the record (Iceberg plan mode)
+        return {**info, **committed, **merge_stats, "stage_sec": stage_sec, "skipped": False}
+
+    def _to_table_schema(self, table, df: DataFrame, skip=()) -> DataFrame:
+        """Project rows to the table's (post-evolve) schema, minus `skip`,
+        plus the `_seq`/`_op` system columns; columns the batch lacks are
+        nulls."""
+        return df.select(
+            *[
+                (F.col(uf.name) if uf.name in df.columns else F.lit(None))
+                .cast(uf.type)
+                .alias(uf.name)
+                for uf in table.schema_fields()
+                if uf.name not in skip
+            ],
+            F.col("seq").alias("_seq"),
+            F.col("op").alias("_op"),
+        )
 
     def _maybe_compact(self, table, merge_stats: dict, stage_sec: dict) -> dict:
         """Amortized maintenance: compact only buckets whose delta-
@@ -1048,24 +983,19 @@ class CdcPipeline:
 
     def lineage(self) -> DataFrame:
         """S6 lineage/metrics table: one row per committed epoch, from the
-        commit log (atomic with the fence by construction)."""
-        schema = (
-            "pipeline_id string, epoch long, table_version long, n_events long, "
-            "n_keys long, n_deletes long, n_dead_letters long, min_seq long, "
-            "max_seq long, wall_sec double, buckets_rewritten long, files_written long"
-        )
-        rows = [
-            {
-                k: info.get(k)
-                for k in [
-                    "pipeline_id", "epoch", "table_version", "n_events", "n_keys",
-                    "n_deletes", "n_dead_letters", "min_seq", "max_seq", "wall_sec",
-                    "buckets_rewritten", "files_written",
-                ]
-            }
-            for info in self._epoch_infos()
+        commit log (atomic with the fence by construction). ``stage_sec``
+        holds the epoch's stage walls (prescan, merge_write, audit) as
+        committed; compaction runs after the commit, so its wall is only
+        in :meth:`apply_epoch`'s return."""
+        cols = [
+            ("pipeline_id", "string"), ("epoch", "long"), ("table_version", "long"),
+            ("n_events", "long"), ("n_keys", "long"), ("n_deletes", "long"),
+            ("n_dead_letters", "long"), ("min_seq", "long"), ("max_seq", "long"),
+            ("wall_sec", "double"), ("buckets_rewritten", "long"),
+            ("files_written", "long"), ("stage_sec", "map<string,double>"),
         ]
-        return self.spark.createDataFrame(rows, schema=schema)
+        rows = [{k: info.get(k) for k, _ in cols} for info in self._epoch_infos()]
+        return self.spark.createDataFrame(rows, schema=", ".join(f"{k} {t}" for k, t in cols))
 
     def offsets(self) -> DataFrame:
         """C5/C6 per-partition checkpointed offsets table."""

@@ -113,7 +113,6 @@ def main() -> None:
         n_buckets=64,
         files_per_bucket=2,
         normalize=False,
-        fused_write=True,
         hot_bucket_salts=8,
         compact_threshold=1 << 30,   # the cron owns compaction
         concurrent_writers=not args.no_maintenance,

@@ -144,7 +144,6 @@ def test_fused_crash_between_task_write_and_commit(spark, tmp_path, event_log):
     ev_dir, expected = event_log
     cfg = PipelineConfig(
         pipeline_id="fcrash", table_dir=str(tmp_path / "table"), n_buckets=8,
-        fused_write=True,
     )
     pipe = CdcPipeline(spark, cfg)
     epochs = sorted(

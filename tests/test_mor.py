@@ -10,11 +10,14 @@ column, across resume and compaction boundaries.
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from foundry_es_spark.fixtures import gen_change_events, write_event_log
+from foundry_es_spark.lake import LakeTable
 from foundry_es_spark.oracle import fold_events
 from foundry_es_spark.plans import CdcPipeline, PipelineConfig
+from foundry_es_spark.plans import pipeline as pipeline_mod
 
 ORACLE_COLS = ["repo", "path", "commit", "lang", "content_sha256"]
 
@@ -108,24 +111,92 @@ def test_mor_read_cost_flat_in_generations(spark, tmp_path):
     assert "Exchange" not in plan, plan
 
 
-def test_fused_write_equals_jvm_write(spark, tmp_path):
+def _jvm_sink(mp):
+    """Make epochs take the JVM writer, as on a backend without the fused
+    task-writer methods (begin/commit_delta_files)."""
+    mp.setattr(pipeline_mod, "supports_fused_sink", lambda table: False)
+
+
+def test_fused_sink_equals_jvm_sink(spark, tmp_path, monkeypatch):
     """The fused task-writer sink (operators/cdc sink_spec + commit_delta_
-    files) must be a pure physical change: identical final state to the
-    JVM write path, with and without enrichment, and identical lineage
-    counts. Also pins that fused epochs really produced delta files."""
+    files) must be a pure physical change against the JVM writer, with and
+    without enrichment: the same rows, seqs and ops (tombstones included),
+    the same values in every column, and the same per-epoch lineage
+    counts. Also pins that the fused epochs really committed task-written
+    delta files and the JVM ones none."""
     tmp = str(tmp_path)
     ev = gen_change_events(spark, n_events=5000, n_keys=700, hot_frac=0.4)
     write_event_log(ev, f"{tmp}/events", epoch_size=1000)
 
+    fused_commits = []
+    commit = LakeTable.commit_delta_files
+
+    def counting_commit(self, *a, **k):
+        fused_commits.append(self.table_dir)
+        return commit(self, *a, **k)
+
+    monkeypatch.setattr(LakeTable, "commit_delta_files", counting_commit)
+
+    def rows(pipe):
+        return (
+            pipe.table.read_internal()
+            .select("repo", "path", "commit", "content", "_seq", "_op")
+            .toPandas().sort_values(["repo", "path"]).reset_index(drop=True)
+        )
+
+    def counts(pipe):
+        return {r["epoch"]: (r["n_keys"], r["n_deletes"]) for r in pipe._epoch_infos()}
+
     for norm in (True, False):
-        a = _replay(spark, tmp, f"fw_on_{norm}", f"{tmp}/events",
-                    fused_write=True, normalize=norm, compact_threshold=3)
-        b = _replay(spark, tmp, f"fw_off_{norm}", f"{tmp}/events",
-                    fused_write=False, normalize=norm, compact_threshold=3)
-        assert _digest(a.table.read()) == _digest(b.table.read()), f"normalize={norm}"
-        la = {r["epoch"]: (r["n_keys"], r["n_deletes"]) for r in a._epoch_infos()}
-        lb = {r["epoch"]: (r["n_keys"], r["n_deletes"]) for r in b._epoch_infos()}
-        assert la == lb
+        fused_commits.clear()
+        fused = _replay(spark, tmp, f"fused_{norm}", f"{tmp}/events",
+                        normalize=norm, compact_threshold=3)
+        with monkeypatch.context() as m:
+            _jvm_sink(m)
+            jvm = _replay(spark, tmp, f"jvm_{norm}", f"{tmp}/events",
+                          normalize=norm, compact_threshold=3)
+        assert fused_commits == [fused.cfg.table_dir] * len(fused._epoch_infos())
+        assert all(r["files_written"] > 0 for r in fused._epoch_infos())
+        pd.testing.assert_frame_equal(rows(fused), rows(jvm))
+        assert _digest(fused.table.read()) == _digest(jvm.table.read()), f"normalize={norm}"
+        assert counts(fused) == counts(jvm)
+
+
+@pytest.fixture(scope="module", params=["jvm", "fused"])
+def metered_replay(request, spark, tmp_path_factory):
+    """A short enriched replay with partition metrics on, through the JVM
+    writer or the fused sink; no compaction, so every epoch's record is
+    written by its own commit."""
+    tmp = str(tmp_path_factory.mktemp("metered"))
+    ev = gen_change_events(spark, n_events=2400, n_keys=400)
+    write_event_log(ev, f"{tmp}/events", epoch_size=800)
+    pipe = CdcPipeline(spark, PipelineConfig(
+        pipeline_id="m", table_dir=f"{tmp}/t", n_buckets=8,
+        record_partition_metrics=True,
+    ))
+    with pytest.MonkeyPatch.context() as m:
+        if request.param == "jvm":
+            _jvm_sink(m)
+        return pipe, pipe.replay_event_dir(f"{tmp}/events")
+
+
+def test_apply_epoch_returns_committed_record(metered_replay):
+    """Both sinks return the epoch record they committed."""
+    pipe, results = metered_replay
+    committed = {r["epoch"]: r for r in pipe._epoch_infos()}
+    applied = [r for r in results if not r["skipped"]]
+    assert len(applied) == len(committed) == 3
+    keys = ["n_keys", "n_deletes", "n_dead_letters", "wall_sec", "stage_sec",
+            "partition_metrics"]
+    for r in applied:
+        assert {k: r[k] for k in keys} == {k: committed[r["epoch"]][k] for k in keys}
+
+
+def test_lineage_carries_stage_walls(metered_replay):
+    pipe, _ = metered_replay
+    stages = [r["stage_sec"] for r in pipe.lineage().collect()]
+    assert len(stages) == 3
+    assert all(s["merge_write"] > 0 for s in stages)
 
 
 def test_change_feed_matches_lineage(spark, tmp_path):

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from foundry_es_spark.fixtures import gen_change_events, write_event_log
 from foundry_es_spark.plans import AuditFailed, CdcPipeline, PipelineConfig
+from foundry_es_spark.plans import pipeline as pipeline_mod
 
 
 def _events(spark, tmp, n=3000, epoch_size=1000):
@@ -38,17 +39,20 @@ def _digest(df):
 
 
 @pytest.mark.parametrize(
-    "cfg",
+    "sink, cfg",
     [
-        {},  # JVM writer path (enriched default)
-        {"normalize": False, "fused_write": True},  # fused task-writer (true WAP)
+        ("jvm", {}),  # JVM writer (enriched)
+        ("fused", {}),  # fused task-writer, enriched (true WAP)
+        ("fused", {"normalize": False}),  # fused task-writer, replication shape
     ],
-    ids=["jvm", "fused"],
+    ids=["jvm", "fused", "fused_replication"],
 )
-def test_audit_blocks_then_replays_exactly_once(spark, tmp_path, cfg):
+def test_audit_blocks_then_replays_exactly_once(spark, tmp_path, monkeypatch, sink, cfg):
+    if sink == "jvm":  # as on a backend without begin/commit_delta_files
+        monkeypatch.setattr(pipeline_mod, "supports_fused_sink", lambda table: False)
     tmp = str(tmp_path)
     events = _events(spark, tmp)
-    name = "wap_" + ("fused" if cfg else "jvm")
+    name = "wap_" + sink
 
     # reference replay without any audit
     ref = _pipe(spark, tmp, name + "_ref", **cfg)
