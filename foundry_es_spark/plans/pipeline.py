@@ -605,22 +605,23 @@ class CdcPipeline:
 
         fence = (self.cfg.pipeline_id, epoch_id)
         # The sink is chosen from the epoch, not configured: the fused
-        # task-writer sink whenever the rows are final before the kernel
-        # and the backend has a task writer. It beat the JVM writer with
-        # and without enrichment (median 6k-event epoch on 4 vCPU: 1.74 s
-        # vs 2.20 s enriched, 1.22 s vs 1.58 s not). C3 suppression and
-        # patch resolution run after the kernel, so they take the JVM
-        # writer, as do backends without begin/commit_delta_files (Iceberg).
+        # task-writer sink when the rows are final before the kernel (no
+        # enrichment, C3 suppression or patch resolution after it) and the
+        # backend has a task writer; else the JVM writer, which enriches
+        # only the compacted survivors. Enriched epochs on the fused sink
+        # (sha256/DATS before the exchange, over every valid event) won at
+        # <=100k-event epochs but lost at 400k (CHANGES.md); moving the
+        # enrichment into the kernel is ROADMAP direction 3.
         if (
-            not self.cfg.suppress_no_ops
+            not self.cfg.normalize
+            and not self.cfg.suppress_no_ops
             and not self.cfg.patch_ops
             and supports_fused_sink(table)
         ):
             # Fused task-writer sink: ONE job whose tasks end at the delta
-            # parquet files. Projection to the table schema and the
-            # JVM-native enrichment columns (sha256, counts, lang, dats) run
-            # before the (bucket, salt) exchange; Arrow dedup, `meta` and
-            # the parquet encode run inside the kernel; the driver collects
+            # parquet files. Projection to the table schema runs before the
+            # (bucket, salt) exchange; Arrow dedup and the parquet encode
+            # run inside the kernel; the driver collects
             # per-file metadata and swaps the commit — the Iceberg
             # writer/commit split. No Python→JVM payload return, no second
             # encode, no rename-based committer in the epoch hot path.
@@ -631,17 +632,9 @@ class CdcPipeline:
             # a concurrent writer evolves or rebuckets before the commit.
             write_sv = int(table._current()["schema_version"])
             version, rel = table.begin_delta_version()
-            if self.cfg.normalize:
-                # the kernel appends `meta` in its Arrow pass
-                rows = self._to_table_schema(
-                    table, with_normalized_columns(valid, include_meta=False),
-                    skip=("meta",),
-                )
-            else:
-                rows = self._to_table_schema(table, valid)
             t2 = time.monotonic()
             file_rows = kernel(
-                rows,
+                self._to_table_schema(table, valid),
                 order_col="_seq",
                 sink_spec={
                     "abs_dir": os.path.join(self.cfg.table_dir, rel),
@@ -784,17 +777,15 @@ class CdcPipeline:
         # `info` backs a sink that never asks for the record (Iceberg plan mode)
         return {**info, **committed, **merge_stats, "stage_sec": stage_sec, "skipped": False}
 
-    def _to_table_schema(self, table, df: DataFrame, skip=()) -> DataFrame:
-        """Project rows to the table's (post-evolve) schema, minus `skip`,
-        plus the `_seq`/`_op` system columns; columns the batch lacks are
-        nulls."""
+    def _to_table_schema(self, table, df: DataFrame) -> DataFrame:
+        """Project rows to the table's (post-evolve) schema plus the
+        `_seq`/`_op` system columns; columns the batch lacks are nulls."""
         return df.select(
             *[
                 (F.col(uf.name) if uf.name in df.columns else F.lit(None))
                 .cast(uf.type)
                 .alias(uf.name)
                 for uf in table.schema_fields()
-                if uf.name not in skip
             ],
             F.col("seq").alias("_seq"),
             F.col("op").alias("_op"),

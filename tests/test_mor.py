@@ -17,7 +17,6 @@ from foundry_es_spark.fixtures import gen_change_events, write_event_log
 from foundry_es_spark.lake import LakeTable
 from foundry_es_spark.oracle import fold_events
 from foundry_es_spark.plans import CdcPipeline, PipelineConfig
-from foundry_es_spark.plans import pipeline as pipeline_mod
 
 ORACLE_COLS = ["repo", "path", "commit", "lang", "content_sha256"]
 
@@ -111,17 +110,12 @@ def test_mor_read_cost_flat_in_generations(spark, tmp_path):
     assert "Exchange" not in plan, plan
 
 
-def _jvm_sink(mp):
-    """Make epochs take the JVM writer, as on a backend without the fused
-    task-writer methods (begin/commit_delta_files)."""
-    mp.setattr(pipeline_mod, "supports_fused_sink", lambda table: False)
-
-
 def test_fused_sink_equals_jvm_sink(spark, tmp_path, monkeypatch):
     """The fused task-writer sink (operators/cdc sink_spec + commit_delta_
-    files) must be a pure physical change against the JVM writer, with and
-    without enrichment: the same rows, seqs and ops (tombstones included),
-    the same values in every column, and the same per-epoch lineage
+    files, taken when normalize is off) must be a pure physical change
+    against the JVM writer (taken when normalize is on): the same rows,
+    seqs and ops (tombstones included), the JVM table's digest equal to
+    sha256 of the fused table's content, and the same per-epoch lineage
     counts. Also pins that the fused epochs really committed task-written
     delta files and the JVM ones none."""
     tmp = str(tmp_path)
@@ -136,48 +130,46 @@ def test_fused_sink_equals_jvm_sink(spark, tmp_path, monkeypatch):
         return commit(self, *a, **k)
 
     monkeypatch.setattr(LakeTable, "commit_delta_files", counting_commit)
+    fused = _replay(spark, tmp, "fused", f"{tmp}/events", normalize=False, compact_threshold=3)
+    jvm = _replay(spark, tmp, "jvm", f"{tmp}/events", normalize=True, compact_threshold=3)
+    # one task-writer commit per fused epoch, none on the JVM replay
+    assert fused_commits == [fused.cfg.table_dir] * len(fused._epoch_infos())
+    assert all(r["files_written"] > 0 for r in fused._epoch_infos())
 
-    def rows(pipe):
-        return (
-            pipe.table.read_internal()
-            .select("repo", "path", "commit", "content", "_seq", "_op")
-            .toPandas().sort_values(["repo", "path"]).reset_index(drop=True)
-        )
+    cols = ["repo", "path", "commit", "content", "_seq", "_op"]
+
+    def rows(df):
+        return df.toPandas().sort_values(["repo", "path"]).reset_index(drop=True)
+
+    pd.testing.assert_frame_equal(
+        rows(fused.table.read_internal().select(*cols)),
+        rows(jvm.table.read_internal().select(*cols)),
+    )
+    pd.testing.assert_frame_equal(
+        rows(fused.table.read().select(
+            "repo", "path", F.sha2("content", 256).alias("content_sha256"))),
+        rows(jvm.table.read().select("repo", "path", "content_sha256")),
+    )
 
     def counts(pipe):
         return {r["epoch"]: (r["n_keys"], r["n_deletes"]) for r in pipe._epoch_infos()}
 
-    for norm in (True, False):
-        fused_commits.clear()
-        fused = _replay(spark, tmp, f"fused_{norm}", f"{tmp}/events",
-                        normalize=norm, compact_threshold=3)
-        with monkeypatch.context() as m:
-            _jvm_sink(m)
-            jvm = _replay(spark, tmp, f"jvm_{norm}", f"{tmp}/events",
-                          normalize=norm, compact_threshold=3)
-        assert fused_commits == [fused.cfg.table_dir] * len(fused._epoch_infos())
-        assert all(r["files_written"] > 0 for r in fused._epoch_infos())
-        pd.testing.assert_frame_equal(rows(fused), rows(jvm))
-        assert _digest(fused.table.read()) == _digest(jvm.table.read()), f"normalize={norm}"
-        assert counts(fused) == counts(jvm)
+    assert counts(fused) == counts(jvm)
 
 
-@pytest.fixture(scope="module", params=["jvm", "fused"])
+@pytest.fixture(scope="module", params=[True, False], ids=["jvm", "fused"])
 def metered_replay(request, spark, tmp_path_factory):
-    """A short enriched replay with partition metrics on, through the JVM
-    writer or the fused sink; no compaction, so every epoch's record is
-    written by its own commit."""
+    """A short replay with partition metrics on, enriched (JVM writer) or
+    not (fused sink); no compaction, so every epoch's record is written by
+    its own commit."""
     tmp = str(tmp_path_factory.mktemp("metered"))
     ev = gen_change_events(spark, n_events=2400, n_keys=400)
     write_event_log(ev, f"{tmp}/events", epoch_size=800)
     pipe = CdcPipeline(spark, PipelineConfig(
         pipeline_id="m", table_dir=f"{tmp}/t", n_buckets=8,
-        record_partition_metrics=True,
+        normalize=request.param, record_partition_metrics=True,
     ))
-    with pytest.MonkeyPatch.context() as m:
-        if request.param == "jvm":
-            _jvm_sink(m)
-        return pipe, pipe.replay_event_dir(f"{tmp}/events")
+    return pipe, pipe.replay_event_dir(f"{tmp}/events")
 
 
 def test_apply_epoch_returns_committed_record(metered_replay):

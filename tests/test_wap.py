@@ -15,7 +15,6 @@ from pyspark.sql import functions as F
 
 from foundry_es_spark.fixtures import gen_change_events, write_event_log
 from foundry_es_spark.plans import AuditFailed, CdcPipeline, PipelineConfig
-from foundry_es_spark.plans import pipeline as pipeline_mod
 
 
 def _events(spark, tmp, n=3000, epoch_size=1000):
@@ -39,20 +38,17 @@ def _digest(df):
 
 
 @pytest.mark.parametrize(
-    "sink, cfg",
+    "cfg",
     [
-        ("jvm", {}),  # JVM writer (enriched)
-        ("fused", {}),  # fused task-writer, enriched (true WAP)
-        ("fused", {"normalize": False}),  # fused task-writer, replication shape
+        {},  # JVM writer (enriched default)
+        {"normalize": False},  # fused task-writer sink (true WAP)
     ],
-    ids=["jvm", "fused", "fused_replication"],
+    ids=["jvm", "fused"],
 )
-def test_audit_blocks_then_replays_exactly_once(spark, tmp_path, monkeypatch, sink, cfg):
-    if sink == "jvm":  # as on a backend without begin/commit_delta_files
-        monkeypatch.setattr(pipeline_mod, "supports_fused_sink", lambda table: False)
+def test_audit_blocks_then_replays_exactly_once(spark, tmp_path, cfg):
     tmp = str(tmp_path)
     events = _events(spark, tmp)
-    name = "wap_" + sink
+    name = "wap_" + ("fused" if cfg else "jvm")
 
     # reference replay without any audit
     ref = _pipe(spark, tmp, name + "_ref", **cfg)
