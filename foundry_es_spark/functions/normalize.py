@@ -124,9 +124,9 @@ def dats_normalize_meta(content: pd.Series) -> pd.DataFrame:
     wrapper over the Arrow-kernel core (no Python row loop anywhere)."""
     import pyarrow as pa
 
-    from foundry_es_spark.arrowpin import pin_arrow_threads
+    from foundry_es_spark.arrowpin import prepare_task_worker
 
-    pin_arrow_threads()  # one worker per core already; see arrowpin.py
+    prepare_task_worker()  # Arrow pool pin + zip finder drop; see arrowpin.py
     struct = dats_meta_arrow(pa.Array.from_pandas(content, type=pa.string()))
     out = pd.DataFrame(
         {name: struct.field(name).to_pandas() for name in [f.name for f in DATS_META_TYPE.fields]}

@@ -542,9 +542,9 @@ class LakeTable:
             import pyarrow.compute as pc
             import pyarrow.parquet as pq
 
-            from foundry_es_spark.arrowpin import pin_arrow_threads
+            from foundry_es_spark.arrowpin import prepare_task_worker
 
-            pin_arrow_threads()  # task-parallel job: intra-task pool is pure overhead
+            prepare_task_worker()  # Arrow pool pin + zip finder drop; see arrowpin.py
 
             SEP = "\x00"  # minimal codepoint: concat-compare == tuple-compare
 

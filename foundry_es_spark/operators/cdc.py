@@ -230,9 +230,9 @@ def compact_sorted_partitions(
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        from foundry_es_spark.arrowpin import pin_arrow_threads
+        from foundry_es_spark.arrowpin import prepare_task_worker
 
-        pin_arrow_threads()  # one worker per core already; see arrowpin.py
+        prepare_task_worker()  # Arrow pool pin + zip finder drop; see arrowpin.py
         _t0 = _time.monotonic()
 
         def _report(n_rows):

@@ -65,6 +65,9 @@ def read_xml_records(
     }
 
     def split_records(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        from foundry_es_spark.arrowpin import prepare_task_worker
+
+        prepare_task_worker()  # Arrow pool pin + zip finder drop; see arrowpin.py
         cols = list(fields)
         for pdf in batches:
             # one vectorized pass splits every record across ALL docs in

@@ -226,12 +226,14 @@ def test_vacuum_spares_inflight_but_reclaims_stale(spark, tmp_table):
     assert t.read().count() == 1
 
 
-def test_pipeline_epochs_race_maintenance_cron(spark, tmp_path):
-    """The real deployment race: a CdcPipeline (fused task-writer sink)
-    applies epochs while a maintenance loop (run_maintain's compaction +
-    tombstone GC shapes) hammers the same table. Exactly-once must hold
-    (all epochs fenced once), and the final state must be bit-identical to
-    an uncontended sequential run of the same event log."""
+def test_pipeline_epochs_race_maintenance_cron(spark, tmp_path, monkeypatch):
+    """The real deployment race: a CdcPipeline (fused task-writer sink, so
+    normalize is off) applies epochs while a maintenance loop
+    (run_maintain's compaction + tombstone GC shapes) hammers the same
+    table, so `commit_delta_files` must rebase past concurrent compactions.
+    Exactly-once must hold (all epochs fenced once), and the final state
+    must be bit-identical to an uncontended sequential run of the same
+    event log."""
     from foundry_es_spark.fixtures import gen_change_events, write_event_log
     from foundry_es_spark.plans import CdcPipeline, PipelineConfig
 
@@ -239,7 +241,15 @@ def test_pipeline_epochs_race_maintenance_cron(spark, tmp_path):
     ev = gen_change_events(spark, n_events=4000, n_keys=400, lines_mod=10)
     write_event_log(ev, events_dir, epoch_size=1000)
 
-    cfg = dict(n_buckets=4, files_per_bucket=1)
+    cfg = dict(n_buckets=4, files_per_bucket=1, normalize=False)
+    fused_commits = []
+    commit = LakeTable.commit_delta_files
+
+    def counting_commit(self, *a, **k):
+        fused_commits.append(self.table_dir)
+        return commit(self, *a, **k)
+
+    monkeypatch.setattr(LakeTable, "commit_delta_files", counting_commit)
     pipe = CdcPipeline(spark, PipelineConfig(
         pipeline_id="race", table_dir=str(tmp_path / "t"),
         concurrent_writers=True, **cfg,
@@ -271,6 +281,8 @@ def test_pipeline_epochs_race_maintenance_cron(spark, tmp_path):
     ti, tm = threading.Thread(target=ingest), threading.Thread(target=maintain)
     ti.start(); tm.start(); ti.join(timeout=600); tm.join(timeout=600)
     assert not errors, errors
+    # every raced epoch took the fused sink
+    assert fused_commits == [t.table_dir] * 4
 
     ref = CdcPipeline(spark, PipelineConfig(
         pipeline_id="race", table_dir=str(tmp_path / "ref"), **cfg,
@@ -281,7 +293,7 @@ def test_pipeline_epochs_race_maintenance_cron(spark, tmp_path):
         return sorted(
             tuple(x)
             for x in table.read()
-            .select("repo", "path", "commit", "content_sha256")
+            .select("repo", "path", "commit", F.sha2("content", 256))
             .collect()
         )
 
