@@ -161,7 +161,7 @@ def gen_change_events(
 
 def as_patch_events(events: DataFrame, every: int = 3) -> DataFrame:
     """Deterministically convert ~1/`every` of the U events into sparse
-    ``op='P'`` patches (compact_latest_patch semantics): variant A patches
+    ``op='P'`` patches (operators/cdc.py fold_key_runs semantics): variant A patches
     content+commit (lang unset), variant B patches lang only (content and
     commit unset, the value suffixed so the patch is observable). The
     remaining events pass through unchanged — the result is a valid patch

@@ -338,7 +338,7 @@ class IcebergBackend:
         )
 
     def merge_patch_sql(self, source: str) -> str:
-        """C9 cluster twin (operators/cdc.py compact_latest_patch): when the
+        """C9 cluster twin (operators/cdc.py fold_key_runs): when the
         source carries SPARSE patch rows (``_op='P'``, unset columns null)
         alongside full images, resolution rides the MERGE itself — no
         pre-read of the stored rows (the local backend's

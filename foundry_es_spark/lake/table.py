@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from foundry_es_spark.lake import log as commitlog
+from foundry_es_spark.lake.taskfile import TASK_FILE_DDL
 
 SYS_COLS = ["_seq", "_op"]
 
@@ -115,51 +116,70 @@ def _file_key_fingerprints(path: str, key_col: str) -> str | None:
         return None
 
 
-def _driver_plan_ranges(
+KEY_SEP = "\x00"  # minimal codepoint: combined-key concat-compare == tuple-compare
+
+
+def _row_group_key_bounds(meta, rg: int, phys: list[str]) -> tuple[str, str] | None:
+    """Conservative [min,max] combined-key bounds of a row group from
+    per-column stats (per-column min/max bracket the true tuple min/max;
+    parquet stat truncation only widens them, so overlap tests stay safe).
+    Non-string key stats return None — lexicographic edges would misorder
+    numeric keys, so those tables take the whole-bucket path / conservative
+    include. ``phys``: the file's physical key-column names."""
+    names = meta.schema.names
+    vals = []
+    for k in phys:
+        if k not in names:
+            return None
+        st = meta.row_group(rg).column(names.index(k)).statistics
+        if st is None or not st.has_min_max:
+            return None
+        if not (isinstance(st.min, str) and isinstance(st.max, str)):
+            return None
+        vals.append((st.min, st.max))
+    return KEY_SEP.join(v[0] for v in vals), KEY_SEP.join(v[1] for v in vals)
+
+
+def _phys_keys(proj: dict, spec: dict, key_idx: list[int]) -> list[str] | None:
+    """Physical names of the key columns in a file's schema version (files
+    carry historical names; resolved through the field-id projection).
+    None when any key column is unmapped in that version."""
+    phys = [proj[spec["sv"]][i] for i in key_idx]
+    return None if any(p is None for p in phys) else phys
+
+
+def _plan_key_ranges(
     specs: list[dict], proj: dict, key_idx: list[int], range_target: int
 ) -> list[str] | None:
-    """Driver twin of the merge kernel's task-side ``plan_ranges`` (same
-    row-group-stat math, same conservative None fallbacks): combined-key
-    range edges for splitting an OVERSIZED bucket's fused rewrite into
-    parallel per-range tasks. One footer read of the bucket's largest
-    file — the same driver budget class as ``_footer_key_bounds``.
-    Returns None (caller keeps the single-task path) when stats are
-    unusable or the file has too few row groups to split."""
+    """Combined-key range edges for merging an OVERSIZED bucket in
+    ``(lo, hi]`` slices: the driver splits a fused rewrite into parallel
+    per-range tasks, a read task merges range by range in bounded memory.
+    Edges come from the row-group stats of the bucket's largest file — a
+    pure function of footers (one footer read, the same budget class as
+    ``_footer_key_bounds``), so it runs on either side. Returns None
+    (caller keeps the whole-bucket path) when stats are unusable or give
+    no interior bound."""
     import pyarrow.parquet as pq
 
-    SEP = "\x00"
     sizes = [os.path.getsize(s["path"]) for s in specs]
-    total = sum(sizes)
-    n_ranges = max(2, -(-total // max(1, range_target)))
+    n_ranges = max(2, -(-sum(sizes) // max(1, range_target)))
     big = max(range(len(specs)), key=lambda i: sizes[i])
-    phys = [proj[specs[big]["sv"]][i] for i in key_idx]
-    if any(p is None for p in phys):
+    phys = _phys_keys(proj, specs[big], key_idx)
+    if phys is None:
         return None
     try:
         meta = pq.ParquetFile(specs[big]["path"]).metadata
     except OSError:
         return None
-    names = meta.schema.names
-    if any(p not in names for p in phys):
-        return None
     cands = []
     for rg in range(meta.num_row_groups):
-        his = []
-        for k in phys:
-            st = meta.row_group(rg).column(names.index(k)).statistics
-            if st is None or not st.has_min_max:
-                return None
-            if not (isinstance(st.min, str) and isinstance(st.max, str)):
-                return None
-            his.append(st.max)
-        cands.append(SEP.join(his))
-    if len(cands) < 2:
-        return None
+        kb = _row_group_key_bounds(meta, rg, phys)
+        if kb is None:
+            return None
+        cands.append(kb[1])
     step = max(1, len(cands) // n_ranges)
     bounds = sorted(set(cands[step - 1 :: step]))[:-1]
-    if not bounds:
-        return None
-    return [""] + bounds + ["\U0010ffff" * 4]
+    return [""] + bounds + ["\U0010ffff" * 4] if bounds else None
 
 
 def bucket_expr(n_buckets: int):
@@ -452,8 +472,8 @@ class LakeTable:
         as one metadata row; a ``mapInArrow`` task then reads that bucket's
         base+delta files with pyarrow, aligns old schema versions to the
         current one by stable field id, sorts by ``(key, _seq, generation)``
-        and keeps the last row of each key run — the same boundary-compare
-        dedup as ``operators.cdc.compact_sorted_partitions``.
+        and folds each key run with ``operators.cdc.fold_key_runs`` — the
+        same fold the epoch kernel (``compact_sorted_partitions``) runs.
 
         Versus the old ``groupBy(key).agg(max_by(payload, _seq))``: that
         plan ships the ENTIRE table (content included) through an exchange
@@ -509,27 +529,24 @@ class LakeTable:
         abs_write_dir = os.path.join(self.table_dir, write_rel) if write_rel else None
 
         range_target = self.merge_range_target_bytes
-        key_idx_drv = [cur_names.index(k) for k in key_cols]
+        key_idx = [cur_names.index(k) for k in key_cols]
 
         # Fused-write mode (compaction / rebucket / tombstone GC): a bucket
         # larger than range_target is split into PARALLEL per-range tasks —
         # without this a skewed bucket (one hot repo = 20%+ of the table)
         # rewrites in ONE task and its wall time caps the whole maintenance
         # job at any cluster width. Edges come from one driver-side footer
-        # read of the bucket's largest file (the same row-group-stat math
-        # as the kernel's plan_ranges); when stats are unusable the bucket
-        # falls back to the single-task path, whose task-side sequential
-        # ranged merge still bounds MEMORY. Ranges partition the combined-
-        # key space, so per-range dedup stays complete, and every range
-        # task writes attempt-unique files — no coordination needed.
+        # read of the bucket's largest file (:func:`_plan_key_ranges`);
+        # when stats are unusable the bucket is rewritten whole by one
+        # task. Ranges partition the combined-key space, so per-range dedup
+        # stays complete, and every range task writes attempt-unique files
+        # — no coordination needed.
         meta_rows = []
         for b, specs in sorted(by_bucket.items()):
             sj = _json.dumps(specs)
             edges = None
             if write_rel and sum(os.path.getsize(s["path"]) for s in specs) > range_target:
-                edges = _driver_plan_ranges(
-                    specs, proj, key_idx_drv, range_target
-                )
+                edges = _plan_key_ranges(specs, proj, key_idx, range_target)
             if edges is None:
                 meta_rows.append((b, sj, None, None))
             else:
@@ -543,10 +560,10 @@ class LakeTable:
             import pyarrow.parquet as pq
 
             from foundry_es_spark.arrowpin import prepare_task_worker
+            from foundry_es_spark.lake.taskfile import task_file_batch, write_task_file
+            from foundry_es_spark.operators.cdc import fold_key_runs
 
             prepare_task_worker()  # Arrow pool pin + zip finder drop; see arrowpin.py
-
-            SEP = "\x00"  # minimal codepoint: concat-compare == tuple-compare
 
             def align(t, spec):
                 """Project a file's table to the current schema by field id
@@ -569,100 +586,24 @@ class LakeTable:
                 names.append("_gen")
                 return pa.table(dict(zip(names, cols)))
 
-            def fold_patches(tbl, neq_np):
-                """Deferred partial-update resolution (patch_resolve='merge',
-                the Paimon partial-update merge-engine shape): the sorted
-                run for a key may interleave full images (I/U/D) with
-                sparse ``_op='P'`` delta rows whose unset columns are null.
-                Result per run: the LAST full image, with each payload
-                column overridden by the last non-null value among the P
-                rows AFTER it; a run with no full image anywhere is an
-                orphan patch (key never existed) and drops; patches after a
-                D are no-ops (the tombstone row survives as-is). All
-                segmented scans are O(n) numpy passes over the sorted
-                table — no per-key Python."""
-                import numpy as np
-
-                n = tbl.num_rows
-                ops = tbl.column("_op").to_numpy(zero_copy_only=False)
-                is_p = ops == "P"
-                idx = np.arange(n)
-                first = np.empty(n, dtype=bool)
-                first[0] = True
-                if n > 1:
-                    first[1:] = neq_np
-                rs = np.maximum.accumulate(np.where(first, idx, 0))
-                gm = np.maximum.accumulate(np.where(~is_p, idx, -1))
-                i0 = np.where(gm >= rs, gm, -1)  # last full image in run, so far
-                last = np.empty(n, dtype=bool)
-                last[-1] = True
-                if n > 1:
-                    last[:-1] = neq_np
-                k_idx = idx[last]
-                i0k = i0[k_idx]
-                alive = i0k != -1  # orphan runs (pure-P) drop
-                k_idx, i0k = k_idx[alive], i0k[alive]
-                base_d = ops[i0k] == "D"
-                names, cols = [], []
-                for name in (*cur_names, "_seq", "_op"):
-                    col = tbl.column(name)
-                    if name in key_cols:
-                        take = k_idx
-                    elif name == "_seq":
-                        # D keeps its own seq (post-D patches are no-ops,
-                        # same as resolve-at-write dropping them pre-sink);
-                        # otherwise the run's latest row's seq wins
-                        take = np.where(base_d, i0k, k_idx)
-                    elif name == "_op":
-                        out_ops = np.where(
-                            base_d, "D", np.where(k_idx != i0k, "U", ops[k_idx])
-                        )
-                        names.append(name)
-                        cols.append(pa.array(out_ops, type=pa.string()))
-                        continue
-                    else:
-                        valid = pc.is_valid(col).to_numpy(zero_copy_only=False)
-                        gcm = np.maximum.accumulate(
-                            np.where(valid & is_p, idx, -1)
-                        )
-                        j = gcm[k_idx]
-                        use_patch = (~base_d) & (j > i0k)  # j>i0 ⇒ same run
-                        take = np.where(use_patch, j, i0k)
-                    names.append(name)
-                    cols.append(col.take(pa.array(take)))
-                return pa.table(dict(zip(names, cols)))
-
             def dedup(parts):
-                """Sort by (key, _seq, _gen), keep each key run's last row;
-                runs containing sparse patch rows fold column-wise
-                (:func:`fold_patches`)."""
+                """Sort by (key, _seq, _gen) and fold each key run
+                (``operators.cdc.fold_key_runs``, the epoch kernel's fold):
+                runs holding sparse ``P`` delta rows (patch_resolve='merge',
+                the Paimon partial-update merge-engine shape) fold column-
+                wise. A pure-P run has no full image in any generation — an
+                orphan patch (key never existed) — and drops."""
                 tbl = pa.concat_tables(parts).combine_chunks()
-                n = tbl.num_rows
-                if n == 0:
+                if tbl.num_rows == 0:
                     return None
                 order = [(k, "ascending") for k in key_cols] + [
                     ("_seq", "ascending"), ("_gen", "ascending"),
                 ]
                 tbl = tbl.take(pc.sort_indices(tbl, sort_keys=order)).combine_chunks()
-                if n == 1:
-                    mask = pa.array([True])
-                    neq_np = None
-                else:
-                    neq = None
-                    for k in key_cols:
-                        col = tbl.column(k).combine_chunks()
-                        d = pc.not_equal(col.slice(0, n - 1), col.slice(1))
-                        neq = d if neq is None else pc.or_(neq, d)
-                    neq = neq.combine_chunks() if isinstance(neq, pa.ChunkedArray) else neq
-                    mask = pa.concat_arrays([neq, pa.array([True])])
-                    neq_np = neq.to_numpy(zero_copy_only=False)
-                if pc.any(pc.equal(tbl.column("_op"), "P")).as_py():
-                    # patch rows present: column-wise fold (one numpy pass
-                    # per column); the patch-free fast path below is
-                    # untouched for every other table
-                    out = fold_patches(tbl, neq_np)
-                else:
-                    out = tbl.filter(mask).drop(["_gen"])
+                out = fold_key_runs(tbl, key_cols, "_op", "_seq").drop(["_gen"])
+                is_p = pc.equal(out.column("_op"), "P")
+                if pc.any(is_p).as_py():
+                    out = out.filter(pc.invert(is_p))
                 if gc_below is not None:
                     # Tombstone GC (fused-compaction mode only): the merged
                     # row is the key's LATEST state and every older
@@ -687,99 +628,10 @@ class LakeTable:
                 if abs_write_dir is None:
                     yield from out.to_batches(max_chunksize=8192)
                     return
-                from pyspark import TaskContext
-
-                bdir = os.path.join(abs_write_dir, f"bkt={b}")
-                os.makedirs(bdir, exist_ok=True)
-                # attempt id: concurrent speculative attempts must never
-                # write the same path (see operators/cdc fused sink)
-                fn = f"part-{file_idx:05d}-a{TaskContext.get().taskAttemptId()}.parquet"
-                pq.write_table(
-                    out, os.path.join(bdir, fn), compression=codec,
-                    **({"row_group_size": rg_rows} if rg_rows else {}),
-                )
-                kcol = out.column(key_cols[0])
-                if pa.types.is_string(kcol.type) or pa.types.is_large_string(kcol.type):
-                    mm = pc.min_max(kcol)
-                    rmin, rmax = mm["min"].as_py(), mm["max"].as_py()
-                    # key-fingerprint set (lake/kfp.py) for point-lookup
-                    # pruning; in-task over the merged Arrow column — free.
-                    # Compacted buckets usually exceed KFP_CAP distinct keys
-                    # and record None (bounds describe them fine) — cap-check
-                    # BEFORE materializing the unique keys into Python.
-                    from foundry_es_spark.lake.kfp import KFP_CAP, kfp_encode
-
-                    uk = pc.unique(kcol)
-                    kfp = kfp_encode(uk.to_pylist()) if len(uk) <= KFP_CAP else None
-                else:  # non-string partition key: no file bounds (pruning skips)
-                    rmin = rmax = kfp = None
-                yield pa.RecordBatch.from_pydict(
-                    {
-                        "bucket": pa.array([b], pa.int32()),
-                        "path": pa.array([f"{write_rel}/bkt={b}/{fn}"], pa.string()),
-                        "rows": pa.array([out.num_rows], pa.int64()),
-                        "rmin": pa.array([rmin], pa.string()),
-                        "rmax": pa.array([rmax], pa.string()),
-                        "kfp": pa.array([kfp], pa.string()),
-                    }
-                )
-
-            key_idx = [cur_names.index(k) for k in key_cols]
-
-            def phys_keys(spec):
-                """Physical names of the key columns in this file's schema
-                version (files carry historical names; resolve through the
-                field-id projection like align() does). None when any key
-                column is unmapped in that version — caller falls back."""
-                phys = [proj[spec["sv"]][i] for i in key_idx]
-                return None if any(p is None for p in phys) else phys
-
-            def key_bounds(meta, rg, phys):
-                """Conservative [min,max] combined-key bounds of a row group
-                from per-column stats (per-column min/max bracket the true
-                tuple min/max; parquet stat truncation only widens them, so
-                overlap tests stay safe). Non-string key stats return None
-                — lexicographic edges would misorder numeric keys, so those
-                tables take the whole-bucket path / conservative include.
-                ``phys``: the file's physical key-column names."""
-                names = meta.schema.names
-                vals = []
-                for k in phys:
-                    if k not in names:
-                        return None
-                    st = meta.row_group(rg).column(names.index(k)).statistics
-                    if st is None or not st.has_min_max:
-                        return None
-                    if not (isinstance(st.min, str) and isinstance(st.max, str)):
-                        return None
-                    vals.append((st.min, st.max))
-                lo = SEP.join(v[0] for v in vals)
-                hi = SEP.join(v[1] for v in vals)
-                return lo, hi
-
-            def plan_ranges(specs):
-                """Key-range edges for the ranged merge, from the largest
-                file's row-group stats; None when stats are unusable
-                (caller falls back to the whole-bucket path)."""
-                metas = [pq.ParquetFile(s["path"]).metadata for s in specs]
-                sizes = [os.path.getsize(s["path"]) for s in specs]
-                total = sum(sizes)
-                n_ranges = max(2, -(-total // max(1, range_target)))
-                big = max(range(len(specs)), key=lambda i: sizes[i])
-                big_phys = phys_keys(specs[big])
-                if big_phys is None:
-                    return None
-                cands = []
-                for rg in range(metas[big].num_row_groups):
-                    kb = key_bounds(metas[big], rg, big_phys)
-                    if kb is None:
-                        return None
-                    cands.append(kb[1])
-                if len(cands) < 2:
-                    return None
-                step = max(1, len(cands) // n_ranges)
-                bounds = sorted(set(cands[step - 1 :: step]))[:-1]
-                return [""] + bounds + ["\U0010ffff" * 4]
+                yield task_file_batch(write_task_file(
+                    out, abs_write_dir, write_rel, b, file_idx, key_cols[0],
+                    codec=codec, row_group_rows=rg_rows,
+                ))
 
             def merge_ranged(specs, b, edges):
                 """Bounded-memory path for buckets larger than
@@ -795,7 +647,7 @@ class LakeTable:
                 cost extra read, never correctness."""
                 pfs = [pq.ParquetFile(spec["path"]) for spec in specs]
                 metas = [pf.metadata for pf in pfs]
-                physes = [phys_keys(spec) for spec in specs]
+                physes = [_phys_keys(proj, spec, key_idx) for spec in specs]
                 out_idx = 0
                 for lo, hi in zip(edges[:-1], edges[1:]):
                     parts = []
@@ -810,7 +662,7 @@ class LakeTable:
                             continue
                         rgs = []
                         for rg in range(meta.num_row_groups):
-                            kb = key_bounds(meta, rg, phys)
+                            kb = _row_group_key_bounds(meta, rg, phys)
                             if kb is None:
                                 rgs.append(rg)  # no stats → conservative
                             # Range is (lo, hi]: a group whose min lower-
@@ -824,7 +676,7 @@ class LakeTable:
                         t = pf.read_row_groups(rgs)
                         combined = pc.binary_join_element_wise(
                             *[pc.cast(t.column(k), pa.string()) for k in phys],
-                            SEP,
+                            KEY_SEP,
                         )
                         m = pc.less_equal(combined, hi)
                         if lo:
@@ -849,9 +701,12 @@ class LakeTable:
                         # bucket's other ranges; files are attempt-unique)
                         yield from merge_ranged(specs, b, [row["lo"], row["hi"]])
                         continue
+                    # read mode: an oversized bucket merges range by range
+                    # (bounded memory); fused writes were split, or found
+                    # unsplittable, by the driver already
                     total = sum(os.path.getsize(s["path"]) for s in specs)
-                    if filter_repos is None and total > range_target:
-                        edges = plan_ranges(specs)
+                    if abs_write_dir is None and filter_repos is None and total > range_target:
+                        edges = _plan_key_ranges(specs, proj, key_idx, range_target)
                         if edges is not None:
                             yield from merge_ranged(specs, b, edges)
                             continue
@@ -887,11 +742,7 @@ class LakeTable:
         meta_df = self.spark.createDataFrame(
             rdd, "bucket int, files string, lo string, hi string"
         )
-        result_schema = (
-            "bucket int, path string, rows long, rmin string, rmax string, kfp string"
-            if write_rel
-            else out_schema
-        )
+        result_schema = TASK_FILE_DDL if write_rel else out_schema
         return meta_df.mapInArrow(_merge_bucket, schema=result_schema)
 
     def _read_merged(

@@ -5,8 +5,10 @@ C1 latest-wins compaction + C2 op fold run as ONE vectorised Arrow pass
 already in the sink's (bucket, salt) write layout and sorted by
 ``(key, seq)``, so the fold is a boundary compare over each sorted
 partition. Hot repos are spread by adaptive hot-bucket salting (C4).
-Sparse-update (op='P') epochs take the column-wise aggregate fold
-(:func:`compact_latest_patch`) instead.
+Every epoch compacts through this kernel, sparse-update (op='P') epochs
+included: its per-run fold (:func:`fold_key_runs`) folds patch columns
+column-wise, and the same fold serves the lake's bucket-local merge, so
+the epoch and every reader apply one rule.
 
 Reference analogue: the ingestion service's duplicate/update check and
 status classification [F-ES: DocumentIngestionService — UNVERIFIED,
@@ -24,7 +26,7 @@ from foundry_es_spark.schema import KEY_COLS, VALID_OPS
 def validity_expr(allow_patch: bool = False) -> F.Column:
     """The S7 validity predicate as a reusable column expression.
     ``allow_patch`` admits op='P' sparse updates (null content legal —
-    a patch that doesn't touch content); see :func:`compact_latest_patch`."""
+    a patch that doesn't touch content); :func:`fold_key_runs` folds them."""
     ops = (*VALID_OPS, "P") if allow_patch else VALID_OPS
     content_free_ops = ("D", "P") if allow_patch else ("D",)
     return (
@@ -44,58 +46,83 @@ def validate_split(events: DataFrame, allow_patch: bool = False) -> tuple[DataFr
     return events.where(valid), events.where(~F.coalesce(valid, F.lit(False)))
 
 
-def compact_latest_patch(
-    events: DataFrame,
-    key_cols: list[str] | None = None,
-    order_col: str = "seq",
-) -> DataFrame:
-    """C2 extension — partial-update ("patch") fold. Debezium/Mongo-style
-    sparse updates: an event with ``op='P'`` carries ONLY the columns it
-    changes (everything else null); I/U carry full row images as before.
+def fold_key_runs(tbl, key_cols, op_col: str = "op", seq_col: str = "seq"):
+    """C1+C2 latest-wins fold of an Arrow table sorted by ``(key, seq)``:
+    one output row per key run, same columns, same order. The one fold
+    behind both task kernels — the epoch's :func:`compact_sorted_partitions`
+    (``op``/``seq``) and the lake's bucket-local merge (``_op``/``_seq``).
 
-    Semantics (per key, in `order_col` order):
-    - I/U set every column (including explicit nulls — a full image);
-      D deletes the row; P overwrites exactly its non-null columns.
-    - P cannot set a column TO null (the standard sparse-encoding
-      limitation; a full U image expresses that).
-    - P against a row that does not exist is a no-op (Debezium's
-      behavior for a patch on a missing document).
+    - A run with no ``P`` row keeps its last row (a boundary compare; the
+      whole fold is this when the table holds no ``P``).
+    - A run with a full image (I/U/D) keeps its LAST full image, with each
+      payload column overridden by the last non-null value among the
+      sparse ``P`` rows after it (op becomes ``U``). A base ``D`` stays
+      ``D`` with its own seq and values: patches after a delete are
+      no-ops, so a D-then-P run stores the same row whether or not the P
+      arrived in the same epoch.
+    - A pure-``P`` run (its base image, if any, lives in an earlier epoch)
+      comes out as net ``P``: the run's max seq and each column's last
+      non-null value. The epoch resolves it against the stored row
+      (``patch_resolve='write'``) or stores it sparse; the merge drops it,
+      since at read time it is an orphan.
 
-    One aggregate, one shuffle, map-side combinable (a key with many
-    updates in a batch ships O(partitions) rows, not one per update).
-    Per non-key column the winner is ``max_by(col, seq)`` over the events
-    that SET that column (all I/U/D rows, plus P rows where the column is
-    non-null; ``max_by`` ignores null ordering keys, pinned by
-    test_patch). The net op is decided by the latest NON-patch event:
-    none → ``'P'`` (the key's base image lives in an earlier epoch — the
-    pipeline resolves it against the stored row), ``D`` → delete (patches
-    after a delete are no-ops), else upsert. Output shape = input shape
-    with ``op`` = net op and ``order_col`` = max seq seen (so
-    seq-conditional MERGE and lineage behave identically to the plain
-    fold).
-    """
-    key_cols = key_cols or KEY_COLS
-    val_cols = [c for c in events.columns if c not in (*key_cols, order_col, "op")]
-    is_base = F.col("op") != "P"
-    base_seq = F.when(is_base, F.col(order_col))
-    aggs = [
-        F.max(order_col).alias(order_col),
-        F.max_by("op", base_seq).alias("_base_op"),
-    ]
-    for c in val_cols:
-        setter_seq = F.when(is_base | F.col(c).isNotNull(), F.col(order_col))
-        aggs.append(F.max_by(c, setter_seq).alias(c))
-    out = events.groupBy(*key_cols).agg(*aggs)
-    net = (
-        F.when(F.col("_base_op").isNull(), F.lit("P"))
-        .when(F.col("_base_op") == "D", F.lit("D"))
-        .otherwise(F.lit("U"))
-    )
-    # restore the input's column order, with op replaced by the net op
-    select = [
-        net.alias("op") if c == "op" else F.col(c) for c in events.columns
-    ]
-    return out.select(*select)
+    P cannot set a column TO null (the standard sparse-encoding limit; a
+    full U image expresses that). Payload columns are every column but
+    the keys, ``op_col`` and ``seq_col``. All segmented scans are O(n)
+    numpy passes over the sorted table — no per-key Python."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    n = tbl.num_rows
+    if n <= 1:
+        return tbl
+    # sorted by (key, seq): a row is its run's last iff the next row
+    # starts a different key run
+    neq = None
+    for k in key_cols:
+        col = tbl.column(k).combine_chunks()
+        d = pc.not_equal(col.slice(0, n - 1), col.slice(1))
+        neq = d if neq is None else pc.or_(neq, d)
+    last_mask = pa.concat_arrays([neq, pa.array([True])])
+    ops_col = tbl.column(op_col)
+    if not pc.any(pc.equal(ops_col, "P")).as_py():
+        return tbl.filter(last_mask)
+
+    last = last_mask.to_numpy(zero_copy_only=False)
+    ops = ops_col.to_numpy(zero_copy_only=False)
+    is_p = ops == "P"
+    idx = np.arange(n)
+    first = np.empty(n, dtype=bool)
+    first[0] = True
+    first[1:] = last[:-1]
+    run_start = np.maximum.accumulate(np.where(first, idx, 0))
+    image = np.maximum.accumulate(np.where(~is_p, idx, -1))
+    image = np.where(image >= run_start, image, -1)  # last full image so far
+    k_idx = idx[last]
+    i0k = image[k_idx]
+    # anchor: the run's last full image, or its last row for a pure-P run
+    anchor = np.where(i0k >= 0, i0k, k_idx)
+    base_d = ops[anchor] == "D"
+    # a patch value counts when it lies after the image (pure-P: in the run)
+    after = np.maximum(i0k, run_start[k_idx] - 1)
+    cols = []
+    for name in tbl.column_names:
+        col = tbl.column(name)
+        if name in key_cols:
+            take = k_idx
+        elif name == seq_col:
+            take = np.where(base_d, anchor, k_idx)
+        elif name == op_col:
+            out_ops = np.where(~base_d & (k_idx != anchor), "U", ops[anchor])
+            cols.append(pa.array(out_ops, type=col.type))
+            continue
+        else:
+            valid = pc.is_valid(col).to_numpy(zero_copy_only=False)
+            j = np.maximum.accumulate(np.where(valid & is_p, idx, -1))[k_idx]
+            take = np.where(~base_d & (j > after), j, anchor)
+        cols.append(col.take(pa.array(take)))
+    return pa.Table.from_arrays(cols, schema=tbl.schema)
 
 
 def compact_sorted_partitions(
@@ -120,7 +147,8 @@ def compact_sorted_partitions(
     table writes — and sorted within partitions by ``(key, seq)``. Because
     bucket and salt are pure functions of the key, every event of a key
     lands in one partition, so latest-wins compaction is a per-partition
-    ``drop_duplicates(keep='last')`` over Arrow batches (vectorized pandas,
+    :func:`fold_key_runs` over the sorted Arrow table (a boundary compare,
+    plus column-wise patch folding when the partition holds ``P`` rows;
     no per-row Python). No broadcast (nothing driver-serial), no second
     shuffle (the writer sees data already in layout), no key-only join.
 
@@ -131,11 +159,12 @@ def compact_sorted_partitions(
 
     ``sink_spec`` — fused-sink mode (``{"abs_dir", "rel", "codec"}``):
     instead of streaming deduped rows back to the JVM, each task writes
-    them straight to ``abs_dir/bkt=<b>/part-<pid>.parquet`` (one file per
-    bucket it holds, key-sorted) and the returned DataFrame carries ONE
-    metadata row per file ``(bucket, path, rows, deletes)``. This is the
-    Iceberg task-writer shape: the epoch's only job ends at the data
-    files; the caller commits the collected metadata. It removes the
+    them straight to ``abs_dir/bkt=<b>/part-<pid>-a<attempt>.parquet`` (one
+    file per bucket it holds, key-sorted; ``lake/taskfile.py``) and the
+    returned DataFrame carries ONE metadata row per file (``TASK_FILE_DDL``
+    plus ``deletes``). This is the Iceberg task-writer shape: the epoch's
+    only job ends at the data files; the caller commits the collected
+    metadata. It removes the
     Python→JVM payload transfer, the JVM parquet encode, and the
     rename-based output committer from the epoch hot path (on object
     stores the committer's renames are copies — this path has none).
@@ -216,10 +245,10 @@ def compact_sorted_partitions(
         out_schema = T.StructType(out_fields)
     else:
         out_schema = parted.schema
-    op_col = "_op" if "_op" in parted.columns else ("op" if "op" in parted.columns else None)
+    op_col = "_op" if "_op" in parted.columns else "op"
 
     def _dedup_gen(batches):
-        """Whole partition in Arrow: boundary-compare dedup on the sorted
+        """Whole partition in Arrow: :func:`fold_key_runs` over the sorted
         key runs, then (optionally) the DATS meta struct — zero pandas
         conversion, RE2-backed kernels, no per-row Python. When a metrics
         accumulator is supplied, the partition reports (rows, seconds) for
@@ -269,18 +298,7 @@ def compact_sorted_partitions(
                     )
                 }
             )
-        if n == 1:
-            mask = pa.array([True])
-        else:
-            # sorted by (key, seq): a row is its key's latest iff the next
-            # row starts a different key run
-            neq = None
-            for k in kc:
-                col = tbl.column(k).combine_chunks()
-                d = pc.not_equal(col.slice(0, n - 1), col.slice(1))
-                neq = d if neq is None else pc.or_(neq, d)
-            mask = pa.concat_arrays([neq.combine_chunks() if isinstance(neq, pa.ChunkedArray) else neq, pa.array([True])])
-        out = tbl.filter(mask)
+        out = fold_key_runs(tbl, kc, op_col, order_col)
         if emit_meta:
             from foundry_es_spark.functions.normalize import dats_meta_arrow
 
@@ -290,79 +308,31 @@ def compact_sorted_partitions(
             _report(n)
             return
         # Fused sink: write this task's rows per bucket, emit metadata.
-        import os as _os
-
-        import pyarrow.parquet as _pq
         from pyspark import TaskContext as _TC
 
-        tc = _TC.get()
-        pid = tc.partitionId()
-        # attempt id in the name: a speculative/retried attempt writing the
-        # same path concurrently on shared storage would tear the file; the
-        # committed metadata row references exactly the winning attempt's
-        # file (Spark delivers one attempt's output), losers become
-        # unreferenced debris
-        att = tc.taskAttemptId()
+        from foundry_es_spark.lake.taskfile import task_file_batch, write_task_file
+
+        pid = _TC.get().partitionId()
         bkt_vals = out.column("bkt")
         data = out.drop(["bkt"] + (["_salt"] if "_salt" in out.column_names else []))
         for b in pc.unique(bkt_vals).to_pylist():
             piece = data.filter(pc.equal(bkt_vals, b))
             if piece.num_rows == 0:
                 continue
-            bdir = _os.path.join(sink_spec["abs_dir"], f"bkt={int(b)}")
-            _os.makedirs(bdir, exist_ok=True)
-            fn = f"part-{pid:05d}-a{att}.parquet"
-            _pq.write_table(
-                piece,
-                _os.path.join(bdir, fn),
-                compression=sink_spec.get("codec", "zstd"),
+            meta = write_task_file(
+                piece, sink_spec["abs_dir"], sink_spec["rel"], int(b), pid,
+                kc[0], codec=sink_spec.get("codec", "zstd"),
             )
-            deletes = (
-                pc.sum(
-                    pc.equal(piece.column(op_col), "D").cast(pa.int64())
-                ).as_py()
-                or 0
-                if op_col
-                else 0
+            meta["deletes"] = (
+                pc.sum(pc.equal(piece.column(op_col), "D").cast(pa.int64())).as_py() or 0
             )
-            # file-level bounds of the partition key (Iceberg manifest
-            # column-bounds analogue): lets the driver prune whole files
-            # out of selective reads without opening footers
-            kcol = piece.column(kc[0])
-            if pa.types.is_string(kcol.type) or pa.types.is_large_string(kcol.type):
-                mm = pc.min_max(kcol)
-                rmin, rmax = mm["min"].as_py(), mm["max"].as_py()
-                # key-fingerprint set (lake/kfp.py): point-lookup pruning
-                # where a delta file's [min,max] spans the key space;
-                # in-task over the already-materialized Arrow column — free.
-                # Cap-check before materializing unique keys into Python.
-                from foundry_es_spark.lake.kfp import KFP_CAP, kfp_encode
-
-                uk = pc.unique(kcol)
-                kfp = kfp_encode(uk.to_pylist()) if len(uk) <= KFP_CAP else None
-            else:
-                rmin = rmax = kfp = None
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "bucket": pa.array([int(b)], pa.int32()),
-                    "path": pa.array(
-                        [f"{sink_spec['rel']}/bkt={int(b)}/{fn}"], pa.string()
-                    ),
-                    "rows": pa.array([piece.num_rows], pa.int64()),
-                    "deletes": pa.array([int(deletes)], pa.int64()),
-                    "rmin": pa.array([rmin], pa.string()),
-                    "rmax": pa.array([rmax], pa.string()),
-                    "kfp": pa.array([kfp], pa.string()),
-                }
-            )
+            yield task_file_batch(meta)
         _report(n)
 
     if sink_spec is not None:
-        return parted.mapInArrow(
-            _dedup_gen,
-            schema="bucket int, path string, rows long, deletes long, "
-                   "rmin string, rmax string, kfp string",
-        )
+        from foundry_es_spark.lake.taskfile import TASK_FILE_DDL
+
+        return parted.mapInArrow(_dedup_gen, schema=TASK_FILE_DDL + ", deletes long")
     return parted.mapInArrow(_dedup_gen, schema=out_schema).drop("_salt")
 
 

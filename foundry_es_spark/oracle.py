@@ -38,11 +38,11 @@ def fold_events(events: pd.DataFrame, extra_cols: list[str] | None = None) -> pd
 
 
 def fold_events_patch(events: pd.DataFrame) -> pd.DataFrame:
-    """Patch-aware fold oracle (compact_latest_patch semantics): I/U set
+    """Patch-aware fold oracle (operators/cdc.py fold_key_runs semantics): I/U set
     the full image, D deletes, P overwrites exactly its non-null columns
     and is a no-op against a missing/deleted key. Row-at-a-time on purpose
-    — the independent reference the one-aggregate kernel is checked
-    against."""
+    — the independent reference the sorted kernel's column-wise fold is
+    checked against."""
     df = events[["seq", "op", "repo", "path", "commit", "lang", "content"]].sort_values(
         "seq", kind="mergesort"
     )

@@ -32,7 +32,6 @@ from foundry_es_spark.lake import log as commitlog
 from foundry_es_spark.lake.backend import supports_fused_sink
 from foundry_es_spark.lake.table import _fields_to_struct, bucket_expr
 from foundry_es_spark.operators.cdc import (
-    compact_latest_patch,
     compact_sorted_partitions,
     suppress_unchanged,
     validate_split,
@@ -207,21 +206,22 @@ class PipelineConfig:
                                      # epoch plan (the documented cost).
     patch_ops: bool = False          # C2 extension: accept op='P' sparse updates
                                      # (Debezium/Mongo partial images — only the
-                                     # changed columns non-null). The epoch folds
-                                     # patches columnar-ly (compact_latest_patch),
-                                     # then resolves keys whose base image lives in
-                                     # an EARLIER epoch against the stored row via a
-                                     # bucket-pruned selective read; a patch for a
-                                     # key that does not exist is a counted no-op
-                                     # (n_orphan_patches in lineage). Uses the
-                                     # aggregate fold (fused/sorted sink disabled);
+                                     # changed columns non-null). The sorted
+                                     # kernel folds patches column-wise (the one
+                                     # fold, operators/cdc.py fold_key_runs, that
+                                     # the bucket-local merge also runs); keys whose
+                                     # base image lives in an EARLIER epoch come out
+                                     # as net 'P'. Patch epochs take the JVM writer
+                                     # (resolution/enrichment run after the kernel);
                                      # incompatible with suppress_no_ops (content
                                      # digest can't witness non-content patches).
     patch_resolve: str = "write"     # WHERE net-'P' keys resolve against the base
                                      # image. "write" (default): per epoch, via a
-                                     # bucket-pruned selective read + broadcast join
-                                     # — full rows on disk, exact n_orphan_patches
-                                     # lineage, change feed carries full images; cost
+                                     # bucket-pruned selective read + broadcast join;
+                                     # a patch for a key that does not exist is a
+                                     # counted no-op — full rows on disk, exact
+                                     # n_orphan_patches lineage, change feed
+                                     # carries full images; cost
                                      # O(touched-bucket data) per epoch, which
                                      # degrades to O(table) when patches spread
                                      # key-uniformly (measured 2.3-3.3x epoch wall on
@@ -229,7 +229,7 @@ class PipelineConfig:
                                      # the bucket-local MoR merge (the Paimon
                                      # partial-update merge engine shape) — sparse P
                                      # rows land as delta rows, every reader folds
-                                     # them column-wise (lake/table.py fold_patches);
+                                     # them with the epoch's fold (fold_key_runs);
                                      # write path is O(batch) regardless of patch
                                      # spread, orphans drop silently at read (no
                                      # lineage count), and change-feed consumers see
@@ -552,13 +552,12 @@ class CdcPipeline:
             return {**info, "skipped": False, "buckets_rewritten": 0}
 
         # C1+C2 (operators/cdc.py): the payload crosses the exchange once,
-        # straight into the sink's (bucket, salt) write layout. The patch
-        # fold (below) takes neither accumulator.
-        part_acc = bucket_acc = None
-        if not self.cfg.patch_ops:
-            if self.cfg.record_partition_metrics:
-                part_acc = partition_metrics_acc(self.spark)
-            bucket_acc = self._bucket_acc()
+        # straight into the sink's (bucket, salt) write layout; patch
+        # epochs included (the kernel folds P runs column-wise).
+        part_acc = (
+            partition_metrics_acc(self.spark) if self.cfg.record_partition_metrics else None
+        )
+        bucket_acc = self._bucket_acc()
 
         def kernel(df: DataFrame, **sink) -> DataFrame:
             return compact_sorted_partitions(
@@ -686,15 +685,7 @@ class CdcPipeline:
                 expect={"n_buckets": nb, "schema_version": write_sv},
             )
         else:
-            if self.cfg.patch_ops:
-                # patch fold: a one-shuffle, map-side combinable hash
-                # aggregate; the sorted layout doesn't apply because net-'P'
-                # keys take a join against the stored rows before they are
-                # full rows at all.
-                compacted = compact_latest_patch(valid)
-            else:
-                compacted = kernel(valid)
-
+            compacted = kernel(valid)
             patch_obs = None
             if self.cfg.patch_ops and self.cfg.patch_resolve == "write":
                 # C2 patch resolution: keys whose base image lives in an
@@ -770,7 +761,7 @@ class CdcPipeline:
                 fence=fence,
                 files_per_bucket=self.cfg.files_per_bucket,
                 info=_info,
-                pre_partitioned=not self.cfg.patch_ops,
+                pre_partitioned=True,
             )
         self._fold_bucket_acc(bucket_acc)
         merge_stats = self._maybe_compact(table, merge_stats, stage_sec)

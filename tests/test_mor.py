@@ -254,7 +254,7 @@ def test_mor_resume_mid_stream(spark, tmp_path):
 
 def test_ranged_merge_boundary_edge_update(spark, tmp_path, monkeypatch):
     """Regression (round-2 review): a single-row delta update for a key that
-    is a base row-group max lands EXACTLY on a plan_ranges edge. The range
+    is a base row-group max lands EXACTLY on a _plan_key_ranges edge. The range
     filter is (lo, hi] inclusive of hi, so pruning groups with kb[0] >= hi
     dropped that update silently — the stale base row won (data loss /
     tombstone resurrection in fused compaction). Pin that an edge-key
@@ -343,7 +343,7 @@ def test_ranged_merge_bounded_memory_path(spark, tmp_path, monkeypatch):
     write_event_log(ev, f"{tmp}/events", epoch_size=1000)
 
     # few buckets → each bucket holds many keys/rows; small row groups on
-    # the fused-compaction output give plan_ranges real candidates
+    # the fused-compaction output give _plan_key_ranges real candidates
     monkeypatch.setattr(LakeTable, "parquet_row_group_rows", 40)
     pipe = CdcPipeline(
         spark,

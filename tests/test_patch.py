@@ -1,7 +1,7 @@
-"""C2 patch-op (partial update) suite: the columnar one-aggregate fold vs a
-row-at-a-time pandas oracle, cross-epoch resolution against stored rows,
-orphan no-ops (counted), patch-after-delete, and exactly-once under a
-patched stream."""
+"""C2 patch-op (partial update) suite: the sorted kernel's column-wise
+key-run fold vs a row-at-a-time pandas oracle, cross-epoch resolution
+against stored rows, orphan no-ops (counted), patch-after-delete, and
+exactly-once under a patched stream."""
 
 from __future__ import annotations
 
@@ -15,7 +15,7 @@ from foundry_es_spark.fixtures import (
     gen_change_events,
     write_event_log,
 )
-from foundry_es_spark.operators.cdc import compact_latest_patch
+from foundry_es_spark.operators.cdc import compact_sorted_partitions
 from foundry_es_spark.oracle import fold_events_patch
 from foundry_es_spark.plans import CdcPipeline, PipelineConfig
 from foundry_es_spark.schema import EVENT_SCHEMA
@@ -41,14 +41,14 @@ def _patched_events(spark, n_events=3000, n_keys=250):
 
 
 def test_patch_fold_matches_pandas_oracle(spark):
-    """The one-aggregate columnar fold (max_by per column over setter
-    events) equals a literal seq-order replay, for every key: surviving
-    values, delete set, and net op."""
+    """The sorted kernel's column-wise fold (last full image, overridden by
+    the last non-null patch value per column) equals a literal seq-order
+    replay, for every key: surviving values, delete set, and net op."""
     ev = _patched_events(spark)
     pdf = ev.toPandas()
     assert (pdf["op"] == "P").sum() > 100, "fixture must actually emit patches"
 
-    got = compact_latest_patch(ev).toPandas()
+    got = compact_sorted_partitions(ev, n_buckets=8).toPandas()
     # every key has an in-batch base (first event per key is I), so no net-P
     assert not (got["op"] == "P").any()
 
@@ -66,6 +66,50 @@ def test_patch_fold_matches_pandas_oracle(spark):
     live_keys = set(map(tuple, expected[["repo", "path"]].to_numpy()))
     dead_keys = set(map(tuple, got[got["op"] == "D"][["repo", "path"]].to_numpy()))
     assert dead_keys == seen - live_keys
+
+
+def test_fold_key_runs_over_epochs_matches_oracle():
+    """The Arrow key-run fold composes the way merge-mode storage uses it:
+    fold each epoch of a random I/U/D/P stream on its own (net-P and D
+    rows kept, as sparse delta rows are), fold the stacked epoch outputs
+    again as the bucket-local merge does, drop the net-P orphans — the
+    live rows equal the row-at-a-time oracle over the whole stream. Covers
+    pure-P runs whose base sits in an earlier epoch, patches before and
+    after full images, and D-then-P runs. No Spark."""
+    import numpy as np
+    import pyarrow as pa
+
+    from foundry_es_spark.operators.cdc import fold_key_runs
+
+    rng = np.random.default_rng(7)
+    n = 3000
+    ops = rng.choice(["I", "U", "D", "P"], size=n, p=[0.2, 0.3, 0.1, 0.4])
+    keys = rng.integers(0, 600, size=n)
+
+    def col(name, p_null):
+        null = (ops == "D") | ((ops == "P") & (rng.random(n) < p_null))
+        return [None if z else f"{name}{i}" for i, z in enumerate(null)]
+
+    pdf = pd.DataFrame({
+        "seq": np.arange(n), "op": ops,
+        "repo": [f"r{k % 7}" for k in keys], "path": [f"p{k}" for k in keys],
+        "commit": col("c", 0.6), "lang": col("l", 0.5), "content": col("x", 0.7),
+    })
+    order = ["repo", "path", "seq"]
+
+    def fold(df):
+        tbl = pa.Table.from_pandas(df.sort_values(order), preserve_index=False)
+        return fold_key_runs(tbl, ["repo", "path"]).to_pandas()
+
+    epochs = [fold(pdf[(pdf["seq"] >= lo) & (pdf["seq"] < lo + 500)]) for lo in range(0, n, 500)]
+    assert all((e["op"] == "P").any() for e in epochs[1:]), "epochs must hold net-P runs"
+    out = fold(pd.concat(epochs, ignore_index=True))
+    live = (
+        out[~out["op"].isin(["P", "D"])][["repo", "path", "commit", "lang", "content"]]
+        .sort_values(["repo", "path"]).reset_index(drop=True)
+    )
+    expected = fold_events_patch(pdf)[["repo", "path", "commit", "lang", "content"]]
+    pd.testing.assert_frame_equal(live, expected)
 
 
 def test_patch_pipeline_cross_epoch_matches_oracle(spark, tmp_path):
@@ -101,6 +145,34 @@ def _mk_events(spark, rows):
         for (seq, op, repo, path, commit, lang, content) in rows
     ]
     return spark.createDataFrame(data, EVENT_SCHEMA)
+
+
+def test_patch_kernel_fold_handcrafted(spark):
+    """Pinned kernel semantics for runs without an in-batch base: a pure-P
+    run comes out as ONE net-P row carrying every column its patches set
+    and the run's max seq; a D-then-P run stays D with the D's own seq
+    (the P is a no-op), the same row the merge stores when the P arrives
+    in a later epoch."""
+    ev = _mk_events(
+        spark,
+        [
+            (5, "P", "r1", "a", "c-new", None, None),         # sets commit
+            (7, "P", "r1", "a", None, "rust", None),          # sets lang
+            (3, "I", "r2", "b", "c-b0", "py", "content-b"),
+            (4, "D", "r2", "b", None, None, None),
+            (9, "P", "r2", "b", None, "java", None),          # patch after delete
+        ],
+    )
+    got = {
+        (r["repo"], r["path"]): r
+        for r in compact_sorted_partitions(ev, n_buckets=4).collect()
+    }
+    a = got[("r1", "a")]
+    assert (a["op"], a["seq"], a["commit"], a["lang"], a["content"]) == (
+        "P", 7, "c-new", "rust", None,
+    )
+    b = got[("r2", "b")]
+    assert (b["op"], b["seq"], b["lang"]) == ("D", 4, None)
 
 
 def test_patch_semantics_handcrafted(spark, tmp_path):
@@ -145,6 +217,18 @@ def test_patch_semantics_handcrafted(spark, tmp_path):
     b = rows[("r1", "b")]
     assert b["lang"] == "markdown"  # T3 canonicalization of the stored "md"
     assert b["content_sha256"] == hashlib.sha256(b"content-b2").hexdigest()
+    # derived columns follow the RESOLVED content after either patch shape:
+    # the lang-only patch keeps the stored content's digest and DATS meta,
+    # the content patch recomputes both
+    import pyarrow as pa
+
+    from foundry_es_spark.functions.normalize import dats_meta_arrow
+
+    assert pipe.cfg.normalize
+    assert (a["content"], b["content"]) == ("content-a", "content-b2")
+    for r in (a, b):
+        assert r["content_sha256"] == hashlib.sha256(r["content"].encode()).hexdigest()
+        assert r["meta"].asDict() == dats_meta_arrow(pa.array([r["content"]])).to_pylist()[0]
 
     # exactly-once: the patch epoch re-delivered is a fenced no-op
     assert pipe.apply_epoch(e1, 1)["skipped"]
