@@ -128,11 +128,10 @@ def dats_normalize_meta(content: pd.Series) -> pd.DataFrame:
 
     prepare_task_worker()  # Arrow pool pin + zip finder drop; see arrowpin.py
     struct = dats_meta_arrow(pa.Array.from_pandas(content, type=pa.string()))
-    out = pd.DataFrame(
+    # every field is already null where content is null (dats_meta_arrow)
+    return pd.DataFrame(
         {name: struct.field(name).to_pandas() for name in [f.name for f in DATS_META_TYPE.fields]}
     )
-    out.loc[content.isna(), :] = pd.NA
-    return out
 
 
 # ------------------------------------- T2b: nested DATS model (SURVEY §1.1)

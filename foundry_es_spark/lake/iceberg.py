@@ -341,9 +341,9 @@ class IcebergBackend:
         """C9 cluster twin (operators/cdc.py fold_key_runs): when the
         source carries SPARSE patch rows (``_op='P'``, unset columns null)
         alongside full images, resolution rides the MERGE itself — no
-        pre-read of the stored rows (the local backend's
-        ``_resolve_patches`` selective read becomes Iceberg's own MATCHED
-        branch). Per column: matched patches coalesce ``s.c`` over ``t.c``,
+        pre-read of the stored rows (the local backend stores them sparse
+        and folds them at read; here Iceberg's own MATCHED branch folds
+        them). Per column: matched patches coalesce ``s.c`` over ``t.c``,
         full images overwrite; a patch with no matching row is NOT inserted
         (the orphan no-op semantic); ``_op`` is stored as 'U' for applied
         patches so the table never contains partial-image markers."""
@@ -388,8 +388,8 @@ class IcebergBackend:
             )
         if self.execute:
             batch.createOrReplaceTempView(view)
-        # C9: a patch-enabled pipeline may deliver sparse _op='P' rows
-        # (patch_resolve='merge'); the plain statement would null-clobber
+        # C9: a patch-enabled pipeline delivers sparse _op='P' rows (net
+        # patches are stored sparse); the plain statement would null-clobber
         # matched rows and insert orphan patches. merge_patch_sql degrades
         # to the plain semantics when no P rows are present, so dispatch on
         # the configured mode, not the data.

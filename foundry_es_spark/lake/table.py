@@ -589,8 +589,8 @@ class LakeTable:
             def dedup(parts):
                 """Sort by (key, _seq, _gen) and fold each key run
                 (``operators.cdc.fold_key_runs``, the epoch kernel's fold):
-                runs holding sparse ``P`` delta rows (patch_resolve='merge',
-                the Paimon partial-update merge-engine shape) fold column-
+                runs holding sparse ``P`` delta rows (every patch epoch's
+                net-P rows, the Paimon partial-update shape) fold column-
                 wise. A pure-P run has no full image in any generation — an
                 orphan patch (key never existed) — and drops."""
                 tbl = pa.concat_tables(parts).combine_chunks()
@@ -995,7 +995,8 @@ class LakeTable:
     ) -> DataFrame:
         """Incremental read / change feed: every change row committed in
         versions [from_version, to_version], with ``_op`` (I/U upsert, D
-        delete), ``_seq`` and ``_commit_version``. Source rows are the
+        delete, P sparse patch of a patch-enabled pipeline), ``_seq`` and
+        ``_commit_version``. Source rows are the
         MoR delta files added at each commit — per-epoch compacted
         latest-per-key changes, which is exactly the CDC feed a downstream
         incremental consumer wants. Compaction/rewrite commits add no

@@ -62,9 +62,9 @@ def fold_key_runs(tbl, key_cols, op_col: str = "op", seq_col: str = "seq"):
       arrived in the same epoch.
     - A pure-``P`` run (its base image, if any, lives in an earlier epoch)
       comes out as net ``P``: the run's max seq and each column's last
-      non-null value. The epoch resolves it against the stored row
-      (``patch_resolve='write'``) or stores it sparse; the merge drops it,
-      since at read time it is an orphan.
+      non-null value. The epoch stores it sparse, and the bucket-local
+      merge folds it over the base; a net ``P`` the merge still sees has
+      no base in any generation (an orphan) and drops.
 
     P cannot set a column TO null (the standard sparse-encoding limit; a
     full U image expresses that). Payload columns are every column but

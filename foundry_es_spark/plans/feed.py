@@ -38,8 +38,8 @@ def net_window(
 
 
 def resolve_patches(source, latest: DataFrame, text_col: str, patch_keys) -> DataFrame:
-    """Fold net-'P' keys (sparse partial images from a patch_resolve='merge'
-    source) into full U/D rows.
+    """Fold net-'P' keys (the sparse partial images every patch epoch
+    stores) into full U/D rows.
 
     The feed's delta rows are SPARSE — a net-'P' key's image may carry
     null (or stale-partial) text. Resolve those keys' TRUE content from

@@ -38,7 +38,7 @@ from foundry_es_spark.operators.cdc import (
     validity_expr,
 )
 from foundry_es_spark.operators.metrics import partition_metrics_acc, summarize_partitions
-from foundry_es_spark.schema import BASE_SCHEMA, KEY_COLS
+from foundry_es_spark.schema import BASE_SCHEMA
 
 # Envelope columns that never become table columns.
 ENVELOPE_COLS = {"seq", "ts", "op", "part", "epoch"}
@@ -64,9 +64,9 @@ def exact_observations(spark: SparkSession):
     The epoch's merge stats ride on CollectMetrics (Observation) nodes
     inside the write job; AQEPropagateEmptyRelation may eliminate those
     nodes when a runtime-materialized subtree turns out empty (e.g. an
-    epoch whose only event is an orphan patch), silently zeroing or — for
-    nodes whose input HAD rows, like the orphan-patch counter riding the
-    resolution join — undercounting lineage metrics. An epoch with empty
+    epoch whose every event is a dead letter), silently zeroing or — for
+    nodes whose input HAD rows, like the footer path's dead-letter
+    counter — undercounting lineage metrics. An epoch with empty
     subtrees is trivially cheap, so the lost optimization is noise; exact
     lineage is not. Session-scoped conf, restored on exit (the epoch body
     is the only query the pipeline runs concurrently)."""
@@ -89,8 +89,8 @@ def observed_metrics(obs: Observation, **defaults) -> dict:
     """Observation metrics with exact zero-row defaults.
 
     AQE's empty-relation propagation may eliminate a CollectMetrics node
-    whose input subtree provably produced 0 rows (e.g. an epoch whose only
-    event is an orphan patch folds to an empty merge batch); the query then
+    whose input subtree provably produced 0 rows (e.g. an epoch whose every
+    event is a dead letter folds to an empty merge batch); the query then
     completes with a schema-LESS empty metrics Row, and ``Observation.get``
     dies inside ``PythonSQLUtils.toPyRow`` (``assert
     row.isInstanceOf[GenericRowWithSchema]``). Because that pruning only
@@ -211,30 +211,14 @@ class PipelineConfig:
                                      # fold, operators/cdc.py fold_key_runs, that
                                      # the bucket-local merge also runs); keys whose
                                      # base image lives in an EARLIER epoch come out
-                                     # as net 'P'. Patch epochs take the JVM writer
-                                     # (resolution/enrichment run after the kernel);
-                                     # incompatible with suppress_no_ops (content
-                                     # digest can't witness non-content patches).
-    patch_resolve: str = "write"     # WHERE net-'P' keys resolve against the base
-                                     # image. "write" (default): per epoch, via a
-                                     # bucket-pruned selective read + broadcast join;
-                                     # a patch for a key that does not exist is a
-                                     # counted no-op — full rows on disk, exact
-                                     # n_orphan_patches lineage, change feed
-                                     # carries full images; cost
-                                     # O(touched-bucket data) per epoch, which
-                                     # degrades to O(table) when patches spread
-                                     # key-uniformly (measured 2.3-3.3x epoch wall on
-                                     # the uniform bench stream). "merge": DEFER to
-                                     # the bucket-local MoR merge (the Paimon
-                                     # partial-update merge engine shape) — sparse P
-                                     # rows land as delta rows, every reader folds
-                                     # them with the epoch's fold (fold_key_runs);
-                                     # write path is O(batch) regardless of patch
-                                     # spread, orphans drop silently at read (no
-                                     # lineage count), and change-feed consumers see
-                                     # sparse P rows (full-image consumers need
-                                     # "write").
+                                     # as net 'P' and are stored sparse, so every
+                                     # read and compaction folds them over the base
+                                     # (the Paimon partial-update shape) and the
+                                     # epoch reads no stored state. An orphan patch
+                                     # (no live base) drops at read and compaction,
+                                     # uncounted. Incompatible with suppress_no_ops
+                                     # (content digest can't witness non-content
+                                     # patches).
     concurrent_writers: bool = False # multi-writer OCC on the local backend: the
                                      # pipeline's commits REBASE past concurrent
                                      # maintenance commits (compaction cron, another
@@ -277,10 +261,6 @@ class CdcPipeline:
                 "content digests, which cannot witness a patch that changed "
                 "only non-content columns — it would wrongly suppress it"
             )
-        if config.patch_resolve not in ("write", "merge"):
-            raise ValueError(
-                f"patch_resolve must be 'write' or 'merge', got {config.patch_resolve!r}"
-            )
 
     # ------------------------------------------------------------- table
 
@@ -298,10 +278,10 @@ class CdcPipeline:
             # pre-created backends simply skip this)
             if not be.schema_fields() and hasattr(be, "create"):
                 be.create(fields)
-            # C9: a patch-enabled pipeline can deliver sparse _op='P' rows
-            # to the sink (patch_resolve='merge'); backends whose MERGE
-            # statement must coalesce-per-column instead of overwriting
-            # expose a patch_mode switch (IcebergBackend.merge_patch_sql).
+            # C9: a patch-enabled pipeline delivers sparse _op='P' rows to
+            # the sink; backends whose MERGE statement must coalesce
+            # per column instead of overwriting expose a patch_mode switch
+            # (IcebergBackend.merge_patch_sql).
             if self.cfg.patch_ops and hasattr(be, "patch_mode"):
                 be.patch_mode = True
             return be
@@ -369,76 +349,6 @@ class CdcPipeline:
             self._bucket_rows = folded
 
     # -------------------------------------------------------- epoch body
-
-    def _resolve_patches(self, table, valid, compacted, n_buckets: int):
-        """Resolve net-'P' keys (base image committed in an earlier epoch)
-        against the stored rows: each unset (null) payload column coalesces
-        from the table's current value; the patched row re-enters the merge
-        as a full 'U' image, so the sink format and read path never see
-        partial rows.
-
-        Scale shape: the selective read is bucket-pruned via the RAW P
-        events (bucket is a pure function of repo — the same pattern as
-        suppress_no_ops), so the state read costs O(patched buckets), never
-        a table scan. Orphan patches — key absent or tombstoned — are no-ops
-        (Debezium semantics), dropped and counted by an Observation riding
-        the merge job (``n_orphan_patches`` in the epoch's lineage info)."""
-        base = compacted.where(F.col("op") != "P")
-        patches = compacted.where(F.col("op") == "P")
-        touched = [
-            r[0]
-            for r in valid.where(F.col("op") == "P")
-            .select(bucket_expr(n_buckets).alias("b"))
-            .distinct()
-            .collect()
-        ]
-        if not touched:
-            return base, None
-        stored = table.read_internal(buckets=touched).where(F.col("_op") != "D")
-        pay = [
-            c
-            for c in compacted.columns
-            if c not in (*KEY_COLS, "op", "seq") and c in stored.columns
-        ]
-        st = stored.select(
-            *KEY_COLS,
-            *[F.col(c).alias(f"_st_{c}") for c in pay],
-            F.lit(True).alias("_hit"),
-        )
-        # Join topology (measured 3.3x epoch cost when naive): a plain
-        # patches LEFT JOIN stored is a sort-merge join that SHUFFLES the
-        # touched buckets' full payload (content included) every epoch —
-        # O(stored) movement for O(patches) work. Instead: (1) semi-reduce
-        # the stored side to the patched keys with a BROADCAST of the bare
-        # keys (stored never moves — the semi join runs inside its scan
-        # tasks), then (2) broadcast the reduced stored rows (<= one per
-        # patch) into the left join, so the patch side never shuffles
-        # either. Both broadcasts are bounded by the epoch's patch count,
-        # which the epoch's own event count bounds in turn — epochs are
-        # micro-batches, the table is not.
-        keys = patches.select(*KEY_COLS)
-        st = st.join(F.broadcast(keys), on=list(KEY_COLS), how="leftsemi")
-        joined = patches.join(F.broadcast(st), on=list(KEY_COLS), how="left")
-        pobs = Observation()
-        joined = joined.observe(
-            pobs,
-            F.sum((~F.coalesce(F.col("_hit"), F.lit(False))).cast("int")).alias(
-                "n_orphan_patches"
-            ),
-        )
-        resolved = joined.where(F.col("_hit")).select(
-            *[
-                F.lit("U").alias("op")
-                if c == "op"
-                else (
-                    F.coalesce(F.col(c), F.col(f"_st_{c}")).alias(c)
-                    if c in pay
-                    else F.col(c)
-                )
-                for c in compacted.columns
-            ]
-        )
-        return base.unionByName(resolved), pobs
 
     def apply_epoch(
         self, batch: DataFrame, epoch_id: int, offsets_hint: dict | None = None
@@ -575,7 +485,7 @@ class CdcPipeline:
 
         committed: dict = {}
 
-        def commit_info(n_keys: int, n_deletes: int, patch_obs=None) -> dict:
+        def commit_info(n_keys: int, n_deletes: int) -> dict:
             # The epoch's commit record. Runs after the write job and
             # BEFORE the fencing commit, so the S7 quarantine of the
             # footer-hint path happens here: a crash after the commit can
@@ -588,13 +498,6 @@ class CdcPipeline:
                     _, dead = validate_split(raw_batch, self.cfg.patch_ops)
                     self._write_dead_letters(dead, epoch_id)
                 out["n_dead_letters"] = n_dead
-            if patch_obs is not None:
-                out["n_orphan_patches"] = int(
-                    observed_metrics(patch_obs, n_orphan_patches=0)[
-                        "n_orphan_patches"
-                    ]
-                    or 0
-                )
             out["wall_sec"] = time.monotonic() - t0
             out["stage_sec"] = stage_sec
             if part_acc is not None:
@@ -605,16 +508,16 @@ class CdcPipeline:
         fence = (self.cfg.pipeline_id, epoch_id)
         # The sink is chosen from the epoch, not configured: the fused
         # task-writer sink when the rows are final before the kernel (no
-        # enrichment, C3 suppression or patch resolution after it) and the
-        # backend has a task writer; else the JVM writer, which enriches
-        # only the compacted survivors. Enriched epochs on the fused sink
-        # (sha256/DATS before the exchange, over every valid event) won at
-        # <=100k-event epochs but lost at 400k (CHANGES.md); moving the
-        # enrichment into the kernel is ROADMAP direction 3.
+        # enrichment or C3 suppression after it; patch epochs included,
+        # since net-'P' rows are stored sparse) and the backend has a task
+        # writer; else the JVM writer, which enriches only the compacted
+        # survivors. Enriched epochs on the fused sink (sha256/DATS before
+        # the exchange, over every valid event) won at <=100k-event epochs
+        # but lost at 400k (CHANGES.md); moving the enrichment into the
+        # kernel is ROADMAP direction 3.
         if (
             not self.cfg.normalize
             and not self.cfg.suppress_no_ops
-            and not self.cfg.patch_ops
             and supports_fused_sink(table)
         ):
             # Fused task-writer sink: ONE job whose tasks end at the delta
@@ -686,17 +589,6 @@ class CdcPipeline:
             )
         else:
             compacted = kernel(valid)
-            patch_obs = None
-            if self.cfg.patch_ops and self.cfg.patch_resolve == "write":
-                # C2 patch resolution: keys whose base image lives in an
-                # EARLIER epoch (net op 'P') coalesce their unset columns
-                # from the stored row — BEFORE enhancement, so derived
-                # columns (digest, DATS) recompute over the resolved full
-                # row. (patch_resolve='merge' skips this entirely: net-P
-                # rows land as sparse delta rows and every bucket-local
-                # merge folds them column-wise — no stored read in the
-                # epoch at all.)
-                compacted, patch_obs = self._resolve_patches(table, valid, compacted, nb)
 
             # T1/T2/T3 — enhancement on the compacted survivors only (far
             # fewer rows than the raw batch when keys are updated repeatedly).
@@ -752,9 +644,7 @@ class CdcPipeline:
                 # has finished, so its wall and Observations are final
                 stage_sec["merge_write"] = round(time.monotonic() - t2, 3)
                 vals = observed_metrics(obs, n_keys=0, n_deletes=0)
-                return commit_info(
-                    int(vals["n_keys"]), int(vals["n_deletes"] or 0), patch_obs
-                )
+                return commit_info(int(vals["n_keys"]), int(vals["n_deletes"] or 0))
 
             merge_stats = table.append_delta(
                 merge_batch,

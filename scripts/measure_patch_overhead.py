@@ -4,16 +4,20 @@
 Replays the standard bench event log twice at identical settings:
 (a) as-is (full-image I/U/D stream), (b) with ~1/3 of the U events
 deterministically converted to sparse ``op='P'`` patches
-(``fixtures.as_patch_events``) and ``patch_ops=True``, which adds the
-cross-epoch resolution join against stored state (bucket-pruned selective
-read per epoch) to the epoch body. The printed ratio IS the cost of patch
-support at this patch rate.
+(``fixtures.as_patch_events``) and ``patch_ops=True``. Patch epochs read
+no stored state: net-'P' rows (keys whose base image lives in an earlier
+epoch) are stored sparse and folded over their base by every read and
+compaction, so the patch-side costs are the kernel's column-wise fold in
+the epoch and that fold in the snapshot read — both are printed. The
+printed ratio IS the cost of patch support at this patch rate.
 
 Usage (same env knobs as bench.py; ~2 min at the 1M default):
 
     python scripts/measure_patch_overhead.py
 
-Prints one JSON line: sustained ev/s for both shapes + the overhead ratio.
+Prints one JSON line: sustained ev/s for both shapes, the overhead ratio,
+the patched table's snapshot read wall, and ``compaction_equal`` (the
+patched table's ``read()`` is the same before and after ``compact()``).
 """
 
 from __future__ import annotations
@@ -70,28 +74,24 @@ def main() -> None:
     base = bench.run_replay(
         spark, events_dir, os.path.join(bench.BENCH_ROOT, "table_pbase"), warmup=2
     )
-    variants = {}
-    reads = {}
-    for mode in ("write", "merge"):
-        tdir = os.path.join(bench.BENCH_ROOT, f"table_ppatch_{mode}")
-        variants[mode] = bench.run_replay(
-            spark, patched_dir, tdir,
-            warmup=2, patch_ops=True, patch_resolve=mode,
-        )
-        # read-side cost: resolve-at-write stores full rows; resolve-at-
-        # merge pays the column fold in every merged read — time it.
-        from foundry_es_spark.lake.table import LakeTable
+    from foundry_es_spark.lake.table import LakeTable
 
-        t = LakeTable(spark, tdir)
-        t0 = time.monotonic()
-        n_rows = t.read().count()
-        reads[mode] = {"rows": n_rows, "read_sec": round(time.monotonic() - t0, 3)}
-    # standing correctness check: the two resolution strategies must agree
-    from foundry_es_spark.lake.table import LakeTable as _LT
-
-    a = _LT(spark, os.path.join(bench.BENCH_ROOT, "table_ppatch_write")).read()
-    b = _LT(spark, os.path.join(bench.BENCH_ROOT, "table_ppatch_merge")).read()
-    modes_equal = a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+    tdir = os.path.join(bench.BENCH_ROOT, "table_ppatch")
+    patch = bench.run_replay(spark, patched_dir, tdir, warmup=2, patch_ops=True)
+    # read-side cost: net-'P' rows are stored sparse, so every merged
+    # read pays the column fold — time it
+    t = LakeTable(spark, tdir)
+    t0 = time.monotonic()
+    n_rows = t.read().count()
+    read = {"rows": n_rows, "read_sec": round(time.monotonic() - t0, 3)}
+    # standing correctness check: compaction folds the sparse rows for
+    # good, which must not change what a read returns
+    before = t.read().localCheckpoint()
+    t.compact(files_per_bucket=2)
+    after = t.read()
+    compaction_equal = (
+        before.exceptAll(after).count() == 0 and after.exceptAll(before).count() == 0
+    )
 
     n_p = spark.read.parquet(patched_dir).where("op = 'P'").count()
     out = {
@@ -99,19 +99,14 @@ def main() -> None:
         "events": bench.N_EVENTS,
         "n_patch_events": n_p,
         "full_image_events_per_sec": base["events_per_sec"],
-        "patch_write_events_per_sec": variants["write"]["events_per_sec"],
-        "patch_merge_events_per_sec": variants["merge"]["events_per_sec"],
-        "overhead_ratio_write": round(
-            base["events_per_sec"] / max(1.0, variants["write"]["events_per_sec"]), 3
+        "patch_events_per_sec": patch["events_per_sec"],
+        "overhead_ratio": round(
+            base["events_per_sec"] / max(1.0, patch["events_per_sec"]), 3
         ),
-        "overhead_ratio_merge": round(
-            base["events_per_sec"] / max(1.0, variants["merge"]["events_per_sec"]), 3
-        ),
-        "modes_equal": modes_equal,
-        "snapshot_read": reads,
+        "compaction_equal": compaction_equal,
+        "snapshot_read": read,
         "full_image": base,
-        "patch_write": variants["write"],
-        "patch_merge": variants["merge"],
+        "patch": patch,
     }
     print(json.dumps(out))
 

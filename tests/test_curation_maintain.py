@@ -188,12 +188,12 @@ def test_wide_window_falls_back_to_full_rebuild(spark, tmp_path):
 
 
 def test_patch_feed_resolves_content_from_snapshot(spark, tmp_path):
-    """patch_resolve='merge' source: net-'P' keys carry sparse images —
+    """Patch-enabled source: net-'P' keys carry sparse images —
     a lang-only patch has NULL content in the feed, so verdicts must come
     from the snapshot; a content patch changes the verdict; an orphan
     patch no-ops; D-then-late-P stays deleted."""
     tmp = str(tmp_path)
-    pipe, cur = _mk(spark, tmp, pipe_kw={"patch_ops": True, "patch_resolve": "merge"})
+    pipe, cur = _mk(spark, tmp, pipe_kw={"patch_ops": True})
     pipe.apply_epoch(_events(spark, [
         (0, "I", "r1", "a", GOOD),
         (1, "I", "r2", "b", CLEAN),

@@ -72,7 +72,7 @@ def _canon(df):
 
 
 def test_merge_mode_patch_feed_resolves_content_from_snapshot(spark, tmp_path):
-    """Source pipeline with patch_resolve='merge': the change feed carries
+    """Patch-enabled source pipeline: the change feed carries
     SPARSE net-'P' rows (a trailing lang-only patch has NULL content). The
     maintainer must resolve those keys' true content from the snapshot —
     signing the sparse feed image would silently corrupt signatures. Also:
@@ -82,7 +82,7 @@ def test_merge_mode_patch_feed_resolves_content_from_snapshot(spark, tmp_path):
     pipe = CdcPipeline(
         spark,
         PipelineConfig(pipeline_id="src", table_dir=f"{tmp}/src", n_buckets=4,
-                       normalize=False, patch_ops=True, patch_resolve="merge"),
+                       normalize=False, patch_ops=True),
     )
     dd = IncrementalDedupPipeline(
         spark,
@@ -304,7 +304,7 @@ def test_delete_then_late_patch_tombstones_signature(spark, tmp_path):
     pipe = CdcPipeline(
         spark,
         PipelineConfig(pipeline_id="src", table_dir=f"{tmp}/src", n_buckets=4,
-                       normalize=False, patch_ops=True, patch_resolve="merge"),
+                       normalize=False, patch_ops=True),
     )
     dd = IncrementalDedupPipeline(
         spark,

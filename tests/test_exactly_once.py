@@ -9,9 +9,9 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from foundry_es_spark.fixtures import gen_change_events, write_event_log
+from foundry_es_spark.fixtures import as_patch_events, gen_change_events, write_event_log
 from foundry_es_spark.lake import log as commitlog
-from foundry_es_spark.oracle import fold_events
+from foundry_es_spark.oracle import fold_events, fold_events_patch
 from foundry_es_spark.plans import CdcPipeline, PipelineConfig
 
 
@@ -22,6 +22,16 @@ def event_log(spark, tmp_path_factory):
     ev_dir = str(tmp / "events")
     write_event_log(events, ev_dir, epoch_size=800)
     return ev_dir, fold_events(events.toPandas())
+
+
+@pytest.fixture(scope="module")
+def patch_log(spark, tmp_path_factory):
+    """The same change log with ~1/3 of its U events as sparse P patches."""
+    tmp = tmp_path_factory.mktemp("xonce_patch")
+    events = as_patch_events(gen_change_events(spark, n_events=4000, n_keys=300, lines_mod=20))
+    ev_dir = str(tmp / "events")
+    write_event_log(events, ev_dir, epoch_size=800)
+    return ev_dir, fold_events_patch(events.toPandas())
 
 
 def _pipe(spark, tmp_path, name="p"):
@@ -136,7 +146,7 @@ def test_crash_between_data_write_and_commit(spark, tmp_path, event_log):
     _assert_state(pipe2, expected)
 
 
-def test_fused_crash_between_task_write_and_commit(spark, tmp_path, event_log):
+def _fused_crash_between_task_write_and_commit(spark, tmp_path, log, patch: bool):
     """Fused sink variant of the crash window: the epoch's tasks WROTE the
     delta parquet files but the driver died before commit_delta_files.
     The files are invisible (not in any commit), the epoch is unfenced, and
@@ -144,10 +154,11 @@ def test_fused_crash_between_task_write_and_commit(spark, tmp_path, event_log):
     duplicates."""
     import os
 
-    ev_dir, expected = event_log
+    ev_dir, expected = log
     cfg = PipelineConfig(
         pipeline_id="fcrash", table_dir=str(tmp_path / "table"), n_buckets=8,
         normalize=False,  # the fused task-writer sink
+        patch_ops=patch,
     )
     pipe = CdcPipeline(spark, cfg)
     epochs = sorted(
@@ -191,3 +202,14 @@ def test_fused_crash_between_task_write_and_commit(spark, tmp_path, event_log):
         .where("count > 1").count()
     )
     assert dup == 0
+
+
+def test_fused_crash_between_task_write_and_commit(spark, tmp_path, event_log):
+    _fused_crash_between_task_write_and_commit(spark, tmp_path, event_log, patch=False)
+
+
+def test_fused_crash_between_task_write_and_commit_patch_log(spark, tmp_path, patch_log):
+    """Patch epochs take the fused sink too (net-'P' rows stored sparse):
+    the same crash window over a patch log converges to the patch fold
+    oracle."""
+    _fused_crash_between_task_write_and_commit(spark, tmp_path, patch_log, patch=True)

@@ -282,7 +282,7 @@ def test_patch_pipeline_dispatches_patch_merge(spark):
     pipe = CdcPipeline(
         spark,
         PipelineConfig(pipeline_id="pp", table_dir="", backend=be,
-                       normalize=False, patch_ops=True, patch_resolve="merge"),
+                       normalize=False, patch_ops=True),
     )
     assert pipe.ensure_table() is be and be.patch_mode is True
     be.merge_upsert(None)  # plan mode: no source view needed

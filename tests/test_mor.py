@@ -13,9 +13,9 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from foundry_es_spark.fixtures import gen_change_events, write_event_log
+from foundry_es_spark.fixtures import as_patch_events, gen_change_events, write_event_log
 from foundry_es_spark.lake import LakeTable
-from foundry_es_spark.oracle import fold_events
+from foundry_es_spark.oracle import fold_events, fold_events_patch
 from foundry_es_spark.plans import CdcPipeline, PipelineConfig
 
 ORACLE_COLS = ["repo", "path", "commit", "lang", "content_sha256"]
@@ -110,16 +110,20 @@ def test_mor_read_cost_flat_in_generations(spark, tmp_path):
     assert "Exchange" not in plan, plan
 
 
-def test_fused_sink_equals_jvm_sink(spark, tmp_path, monkeypatch):
+def _fused_equals_jvm(spark, tmp_path, monkeypatch, patch: bool):
     """The fused task-writer sink (operators/cdc sink_spec + commit_delta_
     files, taken when normalize is off) must be a pure physical change
     against the JVM writer (taken when normalize is on): the same rows,
     seqs and ops (tombstones included), the JVM table's digest equal to
     sha256 of the fused table's content, and the same per-epoch lineage
     counts. Also pins that the fused epochs really committed task-written
-    delta files and the JVM ones none."""
+    delta files and the JVM ones none. The patch case replays a patch log
+    (net-'P' rows stored sparse by both sinks) and checks the fused state
+    against the patch fold oracle too."""
     tmp = str(tmp_path)
     ev = gen_change_events(spark, n_events=5000, n_keys=700, hot_frac=0.4)
+    if patch:
+        ev = as_patch_events(ev)
     write_event_log(ev, f"{tmp}/events", epoch_size=1000)
 
     fused_commits = []
@@ -130,8 +134,9 @@ def test_fused_sink_equals_jvm_sink(spark, tmp_path, monkeypatch):
         return commit(self, *a, **k)
 
     monkeypatch.setattr(LakeTable, "commit_delta_files", counting_commit)
-    fused = _replay(spark, tmp, "fused", f"{tmp}/events", normalize=False, compact_threshold=3)
-    jvm = _replay(spark, tmp, "jvm", f"{tmp}/events", normalize=True, compact_threshold=3)
+    kw = dict(compact_threshold=3, patch_ops=patch)
+    fused = _replay(spark, tmp, "fused", f"{tmp}/events", normalize=False, **kw)
+    jvm = _replay(spark, tmp, "jvm", f"{tmp}/events", normalize=True, **kw)
     # one task-writer commit per fused epoch, none on the JVM replay
     assert fused_commits == [fused.cfg.table_dir] * len(fused._epoch_infos())
     assert all(r["files_written"] > 0 for r in fused._epoch_infos())
@@ -155,6 +160,18 @@ def test_fused_sink_equals_jvm_sink(spark, tmp_path, monkeypatch):
         return {r["epoch"]: (r["n_keys"], r["n_deletes"]) for r in pipe._epoch_infos()}
 
     assert counts(fused) == counts(jvm)
+    if patch:
+        oc = ["repo", "path", "commit", "content"]
+        exp = fold_events_patch(ev.toPandas())[oc].reset_index(drop=True)
+        pd.testing.assert_frame_equal(rows(fused.table.read().select(*oc)), exp)
+
+
+def test_fused_sink_equals_jvm_sink(spark, tmp_path, monkeypatch):
+    _fused_equals_jvm(spark, tmp_path, monkeypatch, patch=False)
+
+
+def test_fused_sink_equals_jvm_sink_patch_log(spark, tmp_path, monkeypatch):
+    _fused_equals_jvm(spark, tmp_path, monkeypatch, patch=True)
 
 
 @pytest.fixture(scope="module", params=[True, False], ids=["jvm", "fused"])

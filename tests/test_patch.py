@@ -1,7 +1,7 @@
 """C2 patch-op (partial update) suite: the sorted kernel's column-wise
-key-run fold vs a row-at-a-time pandas oracle, cross-epoch resolution
-against stored rows, orphan no-ops (counted), patch-after-delete, and
-exactly-once under a patched stream."""
+key-run fold vs a row-at-a-time pandas oracle, cross-epoch patches stored
+sparse and folded by the bucket-local merge, orphan no-ops,
+patch-after-delete, and exactly-once under a patched stream."""
 
 from __future__ import annotations
 
@@ -178,7 +178,8 @@ def test_patch_kernel_fold_handcrafted(spark):
 def test_patch_semantics_handcrafted(spark, tmp_path):
     """Pinned semantics: lang-only patch keeps stored content (digest
     unchanged), content patch recomputes the digest, patch on a missing key
-    is a counted no-op, patch after delete stays deleted."""
+    is a no-op (absent from reads before and after compaction), patch after
+    delete stays deleted."""
     pipe = _pipe(spark, tmp_path, name="hand")
     e0 = _mk_events(
         spark,
@@ -200,14 +201,13 @@ def test_patch_semantics_handcrafted(spark, tmp_path):
         ],
     )
     info = pipe.apply_epoch(e1, 1)
-    assert info["n_orphan_patches"] == 1
     assert info["n_deletes"] == 1
 
     rows = {
         (r["repo"], r["path"]): r
         for r in pipe.table.read().collect()
     }
-    assert set(rows) == {("r1", "a"), ("r1", "b")}
+    assert set(rows) == {("r1", "a"), ("r1", "b")}  # orphan r9/zz absent
     import hashlib
 
     a = rows[("r1", "a")]
@@ -233,6 +233,10 @@ def test_patch_semantics_handcrafted(spark, tmp_path):
     # exactly-once: the patch epoch re-delivered is a fenced no-op
     assert pipe.apply_epoch(e1, 1)["skipped"]
 
+    # compaction folds the sparse rows for good: same rows, orphan still absent
+    pipe.table.compact(files_per_bucket=1)
+    assert {(r["repo"], r["path"]): r for r in pipe.table.read().collect()} == rows
+
 
 def test_patch_validity_and_config_guards(spark, tmp_path):
     """op='P' is only admitted when patch_ops is on (otherwise quarantined
@@ -257,60 +261,68 @@ def test_patch_validity_and_config_guards(spark, tmp_path):
         )
 
 
-def test_patch_resolve_merge_equals_write(spark, tmp_path):
-    """patch_resolve='merge' (deferred, Paimon partial-update-merge shape)
-    and the default resolve-at-write must produce IDENTICAL public state
-    over the same stream — cross-epoch patches, stacked patches, orphans,
-    patch-after-delete, full-image overwrites — and the merge-mode state
-    must survive compaction (the fold is how every reader sees the table,
-    so compaction folding it permanently cannot change anything)."""
+def test_patch_epochs_match_oracle_across_compaction(spark, tmp_path):
+    """Patch epochs store net-'P' rows sparse (the Paimon partial-update
+    shape) and every read folds them: over a stream with cross-epoch
+    patches, stacked patches, orphans, patch-after-delete and full-image
+    overwrites, the folded state equals the row-at-a-time patch oracle, and
+    compaction (which folds the sparse rows permanently) changes nothing."""
     ev = _patched_events(spark, n_events=2400, n_keys=200)
-    states = {}
-    for mode in ("write", "merge"):
-        pipe = _pipe(spark, tmp_path, name=f"m_{mode}", patch_resolve=mode)
-        for e, (lo, hi) in enumerate([(0, 800), (800, 1600), (1600, 2400)]):
-            chunk = ev.where((F.col("seq") >= lo) & (F.col("seq") < hi))
-            pipe.apply_epoch(chunk, e)
-        cols = ["repo", "path", "commit", "lang", "content", "content_sha256"]
-        states[mode] = sorted(tuple(r) for r in pipe.table.read().select(cols).collect())
-        pipe.table.compact(files_per_bucket=1)
-        after = sorted(tuple(r) for r in pipe.table.read().select(cols).collect())
-        assert states[mode] == after, f"{mode}: compaction changed state"
-    assert states["write"] == states["merge"]
+    pipe = _pipe(spark, tmp_path, name="m")
+    for e, (lo, hi) in enumerate([(0, 800), (800, 1600), (1600, 2400)]):
+        pipe.apply_epoch(ev.where((F.col("seq") >= lo) & (F.col("seq") < hi)), e)
+    assert pipe.table.table_changes().where(F.col("_op") == "P").count() > 0, (
+        "the stream must leave sparse net-P rows in storage"
+    )
+    cols = ["repo", "path", "commit", "lang", "content", "content_sha256"]
+    state = sorted(tuple(r) for r in pipe.table.read().select(cols).collect())
+    exp = fold_events_patch(ev.toPandas())
+    assert state == sorted(exp[cols].itertuples(index=False, name=None))
+    pipe.table.compact(files_per_bucket=1)
+    after = sorted(tuple(r) for r in pipe.table.read().select(cols).collect())
+    assert state == after, "compaction changed state"
 
 
-def test_patch_resolve_merge_epoch_has_no_stored_read(spark, tmp_path):
-    """The scale contract of deferred resolution: the epoch body reads NO
-    stored state. _resolve_patches (the only stored-state reader in the
-    patch path — C3 is config-excluded) must never run; resolve-at-write
-    pays that bucket read every epoch, which degrades to O(table) under
-    key-uniform patches (measured 2.3-3.3x epoch wall on the bench)."""
-    pipe = _pipe(spark, tmp_path, name="noread", patch_resolve="merge")
+def test_patch_resolve_merge_epoch_has_no_stored_read(spark, tmp_path, monkeypatch):
+    """The scale contract of storing patches sparse: a patch epoch reads NO
+    stored state (C3, the other stored-state reader, is config-excluded
+    with patch_ops). Both table read entry points raise during the patch
+    epoch; the fold at read then resolves the patch over its base."""
+    from foundry_es_spark.lake import LakeTable
+
+    pipe = _pipe(spark, tmp_path, name="noread")
     pipe.apply_epoch(
-        _mk_events(spark, [(1, "I", "r1", "a", "c0", "py", "v0")]), 0
+        _mk_events(
+            spark,
+            [(i, "I", f"r{i}", "f", f"c{i}", "py", f"content-{i}") for i in range(1, 17)],
+        ),
+        0,
     )
 
     def _boom(*a, **k):  # pragma: no cover - assertion helper
-        raise AssertionError("merge-mode epoch read stored state")
+        raise AssertionError("patch epoch read stored state")
 
-    pipe._resolve_patches = _boom
-    info = pipe.apply_epoch(
-        _mk_events(spark, [(2, "P", "r1", "a", None, "rust", None)]), 1
-    )
-    assert info["skipped"] is False
-    row = pipe.table.read().collect()[0]
-    assert row["lang"] == "rust" and row["content"] == "v0"
-    assert row["content_sha256"] is not None  # base digest survived the fold
+    with monkeypatch.context() as m:
+        m.setattr(LakeTable, "read", _boom)
+        m.setattr(LakeTable, "read_internal", _boom)
+        info = pipe.apply_epoch(
+            _mk_events(spark, [(100, "P", "r7", "f", None, "go", None)]), 1
+        )
+    assert info["skipped"] is False and info["n_keys"] == 1
+    got = pipe.table.read(repos=["r7"]).collect()[0]
+    assert got["lang"] == "go" and got["commit"] == "c7"
+    assert got["content"] == "content-7"
+    assert got["content_sha256"] is not None  # base digest survived the fold
 
 
 def test_patch_fold_survives_ranged_merge(spark, tmp_path, monkeypatch):
-    """merge-mode patches through the bounded-memory RANGED merge: forcing
+    """Sparse patches through the bounded-memory RANGED merge: forcing
     merge_range_target_bytes=1 makes every bucket merge range-by-range;
     ranges partition the key space, so the per-range fold must see each
     key's full run — the folded state must equal the whole-bucket path."""
     from foundry_es_spark.lake import LakeTable
 
-    pipe = _pipe(spark, tmp_path, name="rng", patch_resolve="merge")
+    pipe = _pipe(spark, tmp_path, name="rng")
     ev = _patched_events(spark, n_events=1500, n_keys=120)
     for e, (lo, hi) in enumerate([(0, 750), (750, 1500)]):
         pipe.apply_epoch(ev.where((F.col("seq") >= lo) & (F.col("seq") < hi)), e)
@@ -321,19 +333,26 @@ def test_patch_fold_survives_ranged_merge(spark, tmp_path, monkeypatch):
     assert whole == ranged
 
 
-def test_patch_resolve_config_guards(spark, tmp_path):
-    with pytest.raises(ValueError, match="patch_resolve"):
-        _pipe(spark, tmp_path, name="bad1", patch_resolve="defer")
+def _write_epoch(df, path: str) -> str:
+    """One epoch in the event-log layout (part= dirs), so apply_epoch can
+    take its offsets from parquet footers."""
+    df.withColumn("part", F.lit(0)).write.partitionBy("part").parquet(path)
+    return path
 
 
 def test_orphan_only_epoch_reports_exact_metrics(spark, tmp_path):
     """Regression (AQE empty-relation pruning vs Observation): an epoch
-    whose only event is an orphan patch folds to an EMPTY merge batch;
-    AQEPropagateEmptyRelation used to eliminate the CollectMetrics nodes,
-    crashing Observation.get with a schema-less Row (toPyRow assertion)
-    and — for the orphan counter riding the resolution join, whose input
-    HAD a row — silently undercounting. apply_epoch now excludes that AQE
-    rule for the epoch body, so lineage stays exact."""
+    that folds to an EMPTY merge batch let AQEPropagateEmptyRelation
+    eliminate the CollectMetrics nodes, crashing Observation.get with a
+    schema-less Row (toPyRow assertion) or — for a counter whose input HAD
+    rows — silently undercounting. apply_epoch excludes that AQE rule for
+    the epoch body, so lineage stays exact. Both epochs run through
+    offsets_from_footers, so the dead-letter Observation rides the write
+    job: an orphan-only epoch stores its one sparse net-'P' row (n_keys 1),
+    and a dead-letter-only epoch folds to an empty merge batch whose
+    dead-letter count is still exact."""
+    from foundry_es_spark.plans import offsets_from_footers
+
     assert (
         spark.conf.get("spark.sql.adaptive.enabled", "true") == "true"
     ), "regression only meaningful with AQE on"
@@ -341,11 +360,17 @@ def test_orphan_only_epoch_reports_exact_metrics(spark, tmp_path):
     pipe.apply_epoch(
         _mk_events(spark, [(1, "I", "r1", "a", "c0", "py", "content-a")]), 0
     )
-    info = pipe.apply_epoch(
-        _mk_events(spark, [(2, "P", "r9", "zz", None, None, None)]), 1
-    )
-    assert info["n_orphan_patches"] == 1
-    assert info["n_keys"] == 0 and info["n_deletes"] == 0
+    for e, rows in [
+        (1, [(2, "P", "r9", "zz", None, None, None)]),  # orphan patch
+        (2, [(3, "X", "r1", "a", None, None, None)]),   # dead letter only
+    ]:
+        d = _write_epoch(_mk_events(spark, rows), str(tmp_path / f"orph_ev{e}"))
+        pipe.apply_epoch(spark.read.parquet(d), e, offsets_from_footers(d))
+    infos = {r["epoch"]: r for r in pipe._epoch_infos()}
+    assert (infos[1]["n_keys"], infos[1]["n_deletes"], infos[1]["n_dead_letters"]) == (1, 0, 0)
+    assert (infos[2]["n_keys"], infos[2]["n_deletes"], infos[2]["n_dead_letters"]) == (0, 0, 1)
+    stored = pipe.table.table_changes().where(F.col("_op") == "P").collect()
+    assert [(r["repo"], r["path"], r["_seq"]) for r in stored] == [("r9", "zz", 2)]
     # the exclusion is scoped: the session conf is restored afterwards
     assert not spark.conf.get(
         "spark.sql.adaptive.optimizer.excludedRules", ""
@@ -355,9 +380,8 @@ def test_orphan_only_epoch_reports_exact_metrics(spark, tmp_path):
 
 def test_patch_with_schema_evolution(spark, tmp_path):
     """A patch may carry a column the table has never seen: C7 evolves the
-    schema first (resolution runs after evolve_for_batch), the stored row
-    coalesces for every other column, and pre-evolution rows read null for
-    the new column."""
+    schema first, the read-time fold keeps the stored value of every other
+    column, and pre-evolution rows read null for the new column."""
     pipe = _pipe(spark, tmp_path, name="evo")
     e0 = _mk_events(
         spark,
@@ -374,8 +398,7 @@ def test_patch_with_schema_evolution(spark, tmp_path):
     e1 = spark.createDataFrame(
         [(100, None, "P", "r1", "a", None, None, None, 42)], evolved
     )
-    info = pipe.apply_epoch(e1, 1)
-    assert info.get("n_orphan_patches", 0) == 0
+    pipe.apply_epoch(e1, 1)
 
     rows = {(r["repo"], r["path"]): r for r in pipe.table.read().collect()}
     a, b = rows[("r1", "a")], rows[("r1", "b")]
@@ -383,38 +406,3 @@ def test_patch_with_schema_evolution(spark, tmp_path):
     assert a["content_sha256"] is not None and a["lang"] == "python"
     assert a["commit"] == "c-a0"  # untouched columns resolved from storage
     assert b["n_stars"] is None  # pre-evolution row unaffected
-
-
-def test_patch_resolution_reads_only_touched_buckets(spark, tmp_path):
-    """Scale contract: the patch-resolution state read is bucket-pruned —
-    an epoch patching one repo opens only that repo's bucket files, not
-    the table. Asserted the same way the selective-read tests do: via the
-    files the pruned plan lists."""
-    pipe = _pipe(spark, tmp_path, name="prune")
-    base = _mk_events(
-        spark,
-        [(i, "I", f"r{i}", "f", f"c{i}", "py", f"content-{i}") for i in range(1, 17)],
-    )
-    pipe.apply_epoch(base, 0)
-
-    from foundry_es_spark.lake.table import bucket_expr
-
-    # pick one repo; compute its bucket and assert the pruned file list for
-    # the patch read is the single-bucket subset
-    tgt = "r7"
-    n_buckets = pipe.cfg.n_buckets
-    bkt = (
-        spark.createDataFrame([(tgt,)], "repo string")
-        .select(bucket_expr(n_buckets).alias("b"))
-        .collect()[0][0]
-    )
-    table = pipe.table
-    rec = table._current()
-    pruned = table._pruned_files(rec, None, [bkt])
-    all_files = rec["files"]
-    assert len(pruned) < len(all_files)
-    e1 = _mk_events(spark, [(100, "P", tgt, "f", None, "go", None)])
-    info = pipe.apply_epoch(e1, 1)
-    assert info.get("n_orphan_patches", 0) == 0
-    got = pipe.table.read(repos=[tgt]).collect()[0]
-    assert got["lang"] == "go" and got["commit"] == "c7"

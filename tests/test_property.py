@@ -106,8 +106,7 @@ PATCH_EVENT_ST = st.tuples(
 def patch_logs(draw):
     evs = draw(st.lists(PATCH_EVENT_ST, min_size=1, max_size=60))
     n_epochs = draw(st.integers(1, 3))
-    resolve = draw(st.sampled_from(["write", "merge"]))
-    return evs, n_epochs, resolve
+    return evs, n_epochs
 
 
 @settings(
@@ -119,12 +118,11 @@ def patch_logs(draw):
 def test_patch_replay_matches_patch_fold_oracle(spark, tmp_path_factory, log):
     """C9 adversarial interleavings: patches before/after deletes, orphan
     patches, all-null patches, patches split across arbitrary epoch
-    boundaries — engine vs the row-at-a-time patch fold oracle, under BOTH
-    resolution strategies (resolve-at-write's selective read + broadcast
-    join, and resolve-at-merge's deferred column fold in the MoR kernel)."""
+    boundaries — engine (net-'P' rows stored sparse, folded by the MoR
+    merge at read) vs the row-at-a-time patch fold oracle."""
     from foundry_es_spark.oracle import fold_events_patch
 
-    evs, n_epochs, resolve = log
+    evs, n_epochs = log
     tmp = str(tmp_path_factory.mktemp("patchprop"))
     rows = []
     for seq, (ri, pi, op, text, mask) in enumerate(evs):
@@ -162,7 +160,6 @@ def test_patch_replay_matches_patch_fold_oracle(spark, tmp_path_factory, log):
             table_dir=f"{tmp}/t",
             n_buckets=4,
             patch_ops=True,
-            patch_resolve=resolve,
         ),
     )
     per_epoch = max(1, (len(rows) + n_epochs - 1) // n_epochs)

@@ -6,6 +6,7 @@ BASELINE.json correctness invariant.
 """
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from foundry_es_spark.fixtures import gen_change_events, write_event_log
@@ -61,6 +62,32 @@ def test_normalized_columns_populated(spark, tmp_path):
     assert row.n_chars == len(row.content)
     assert row.meta.title == row.content.split("\n", 1)[0].strip()[:120]
     assert row.meta.n_words > 0
+
+
+@pytest.mark.filterwarnings("error::FutureWarning")
+def test_dats_meta_udf_body_nulls_only_null_content(monkeypatch):
+    """Spark-free: the DATS meta UDF's pandas body gives all-null fields
+    for a null-content row and the Arrow core's values for the others; a
+    batch without null content keeps its native dtypes (assigning NA into
+    its bool column warned in pandas 2.x, an error in a future pandas)."""
+    import pyarrow as pa
+
+    from foundry_es_spark import arrowpin
+    from foundry_es_spark.functions.normalize import (
+        DATS_META_TYPE,
+        dats_meta_arrow,
+        dats_normalize_meta,
+    )
+
+    monkeypatch.setattr(arrowpin, "prepare_task_worker", lambda: None)  # worker-only hook
+    texts = ["MIT License\nx = deadbeef01", None, "def f():\n    return 1"]
+    ref = dats_meta_arrow(pa.array(texts, pa.string())).to_pylist()
+    out = dats_normalize_meta.func(pd.Series(texts, dtype=object))
+    assert list(out.columns) == [f.name for f in DATS_META_TYPE.fields]
+    assert out.iloc[1].isna().all()
+    assert [out.iloc[i].to_dict() for i in (0, 2)] == [ref[0], ref[2]]
+    full = dats_normalize_meta.func(pd.Series([texts[0], texts[2]]))
+    assert full.to_dict("records") == [ref[0], ref[2]]
 
 
 def test_nested_dats_column(spark, tmp_path):

@@ -45,8 +45,8 @@ def test_streaming_equals_batch_and_oracle(spark, tmp_path):
 
 
 def test_streaming_patch_merge_equals_batch_and_oracle(spark, tmp_path):
-    """Streaming ingest of a PATCH stream with deferred resolution
-    (patch_resolve='merge'): the foreachBatch epochs chunk the patches at
+    """Streaming ingest of a PATCH stream (net-'P' rows stored sparse and
+    folded by the merge at read): the foreachBatch epochs chunk the patches at
     trigger boundaries (cross-trigger bases), and the folded state must
     equal both the batch replay and the row-at-a-time patch fold oracle."""
     from foundry_es_spark.fixtures import as_patch_events
@@ -58,7 +58,7 @@ def test_streaming_patch_merge_equals_batch_and_oracle(spark, tmp_path):
     ev_dir = str(tmp_path / "events")
     write_event_log(events, ev_dir, epoch_size=600)
 
-    cfg = dict(patch_ops=True, patch_resolve="merge")
+    cfg = dict(patch_ops=True)
     stream_pipe = CdcPipeline(
         spark,
         PipelineConfig(pipeline_id="sp", table_dir=str(tmp_path / "t_stream"), **cfg),
