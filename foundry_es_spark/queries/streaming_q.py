@@ -86,12 +86,17 @@ def _detach_view(spark: SparkSession, name: str) -> DataFrame:
 
 def _events_stream_dir(sf: str) -> str:
     """The file stream source needs a DIRECTORY; testdata ships one parquet
-    file per table (read-only). Expose it through a symlink dir in /tmp."""
+    file per table (read-only). Expose it through a symlink dir under the
+    temp dir (``tempfile.gettempdir()``, normally /tmp)."""
     import hashlib
     import os
+    import tempfile
 
     d = os.path.join(
-        "/tmp", "foundry_stream_src", hashlib.md5(sf.encode()).hexdigest()[:12], "events"
+        tempfile.gettempdir(),
+        "foundry_stream_src",
+        hashlib.md5(sf.encode()).hexdigest()[:12],
+        "events",
     )
     os.makedirs(d, exist_ok=True)
     link = os.path.join(d, "part-0.parquet")

@@ -10,6 +10,7 @@ state-operator metrics (numRowsDroppedByWatermark / state row eviction).
 from __future__ import annotations
 
 import os
+import tempfile
 import time
 import uuid
 
@@ -272,8 +273,12 @@ def test_events_stream_dir_symlink_race_safe(tmp_path, monkeypatch):
         calls.append(dst)
         real_symlink(src, dst)  # raises FileExistsError like the loser sees
 
+    # a fresh link dir: the default root outlives pytest's numbered tmp
+    # dirs, so a reused tmp_path string can find a link left by an old run
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "tmp"))
+    (tmp_path / "tmp").mkdir()
     monkeypatch.setattr(os, "symlink", racing_symlink)
-    # unique sf string (tmp_path is per-run) -> fresh /tmp dir for this test
     d = sq._events_stream_dir(str(tmp_path / "sf-race"))
+    assert d.startswith(str(tmp_path))
     assert os.path.islink(os.path.join(d, "part-0.parquet"))
     assert calls  # the race path actually executed
