@@ -19,6 +19,7 @@ SURVEY.md §0].
 
 from __future__ import annotations
 
+import itertools
 import os
 import shutil
 from dataclasses import dataclass
@@ -180,6 +181,24 @@ def _plan_key_ranges(
     step = max(1, len(cands) // n_ranges)
     bounds = sorted(set(cands[step - 1 :: step]))[:-1]
     return [""] + bounds + ["\U0010ffff" * 4] if bounds else None
+
+
+def _pack_bins(items: list, weights: list[int], k: int) -> list[list]:
+    """Greedy largest-first packing of ``items`` into at most ``k`` bins:
+    each item, heaviest first, joins the currently lightest bin. The
+    heaviest bin ends at most one item above the mean load (the bin was
+    the lightest, so at or below the mean, when its last item joined).
+    Empty bins are dropped."""
+    import heapq
+
+    k = max(1, min(k, len(items)))
+    bins: list[list] = [[] for _ in range(k)]
+    heap = [(0, j) for j in range(k)]
+    for i in sorted(range(len(items)), key=lambda i: -weights[i]):
+        load, j = heapq.heappop(heap)
+        bins[j].append(items[i])
+        heapq.heappush(heap, (load + weights[i], j))
+    return [b for b in bins if b]
 
 
 def bucket_expr(n_buckets: int):
@@ -468,17 +487,23 @@ class LakeTable:
         """Merge-on-read with NO payload shuffle: every file of a bucket
         holds a disjoint key range vs other buckets (the write layout is
         ``bucket(N, repo)`` across ALL generations), so latest-row-per-key
-        is a bucket-local problem. The driver ships each bucket's file list
-        as one metadata row; a ``mapInArrow`` task then reads that bucket's
-        base+delta files with pyarrow, aligns old schema versions to the
-        current one by stable field id, sorts by ``(key, _seq, generation)``
-        and folds each key run with ``operators.cdc.fold_key_runs`` — the
-        same fold the epoch kernel (``compact_sorted_partitions``) runs.
+        is a bucket-local problem. The driver makes one metadata row per
+        bucket (per key range of an oversized bucket in fused-write mode)
+        and packs the rows largest-first by bytes into at most
+        ``defaultParallelism`` bins (:func:`_pack_bins`). The merge is a
+        ``mapInArrow`` over ``spark.range(k, numPartitions=k)``: task j
+        takes bin j from its closure, so a task crosses into Python once,
+        with no Python RDD upstream of it. For each of its rows the task
+        reads that bucket's base+delta files with pyarrow, aligns old
+        schema versions to the current one by stable field id, sorts by
+        ``(key, _seq, generation)`` and folds each key run with
+        ``operators.cdc.fold_key_runs`` — the same fold the epoch kernel
+        (``compact_sorted_partitions``) runs.
 
         Versus the old ``groupBy(key).agg(max_by(payload, _seq))``: that
         plan ships the ENTIRE table (content included) through an exchange
         whenever a single delta file exists. Here the only thing that moves
-        is the per-bucket file list (bytes); the payload is read once,
+        is the file lists in the task closure; the payload is read once,
         merged in place, and streamed out. This is the Hudi/Iceberg MoR
         file-group-local merge restated for the local backend — the plan
         contains no Exchange (asserted in tests/test_mor.py).
@@ -489,8 +514,8 @@ class LakeTable:
 
         ``write_rel``: fused-compaction mode. Instead of streaming the
         merged rows back, each task writes them straight to
-        ``<table>/<write_rel>/bkt=<b>/`` as parquet (one file, or
-        ``files_per_bucket`` row-sliced files for hot buckets) and emits
+        ``<table>/<write_rel>/bkt=<b>/`` as parquet (one file per bucket or
+        key range, or ``files_per_bucket`` row-sliced files) and emits
         ONE metadata row per file — the Iceberg writer shape: tasks
         produce data files, the driver commits a metadata swap. This
         halves compaction IO (no Arrow→JVM transfer, no second encode
@@ -516,8 +541,6 @@ class LakeTable:
             proj[sv] = [old_by_id.get(cf.id) for cf in cur_fields]
         cur_names = [cf.name for cf in cur_fields]
 
-        import json as _json
-
         from pyspark.sql.pandas.types import to_arrow_type
 
         target_types = [to_arrow_type(f.dataType) for f in out_schema.fields]
@@ -539,22 +562,28 @@ class LakeTable:
         # read of the bucket's largest file (:func:`_plan_key_ranges`);
         # when stats are unusable the bucket is rewritten whole by one
         # task. Ranges partition the combined-key space, so per-range dedup
-        # stays complete, and every range task writes attempt-unique files
-        # — no coordination needed.
-        meta_rows = []
+        # stays complete, and file names carry the task attempt and a
+        # per-task index — no coordination needed.
+        meta_rows, weights = [], []
         for b, specs in sorted(by_bucket.items()):
-            sj = _json.dumps(specs)
+            size = sum(os.path.getsize(s["path"]) for s in specs)
             edges = None
-            if write_rel and sum(os.path.getsize(s["path"]) for s in specs) > range_target:
+            if write_rel and size > range_target:
                 edges = _plan_key_ranges(specs, proj, key_idx, range_target)
             if edges is None:
-                meta_rows.append((b, sj, None, None))
+                meta_rows.append((b, specs, size, None, None))
+                weights.append(size)
             else:
                 for lo, hi in zip(edges[:-1], edges[1:]):
-                    meta_rows.append((b, sj, lo, hi))
+                    meta_rows.append((b, specs, size, lo, hi))
+                    weights.append(size // (len(edges) - 1))
+        # at most one bin per slot; task j of the range below takes bin j
+        bins = _pack_bins(
+            meta_rows, weights, self.spark.sparkContext.defaultParallelism
+        )
         rg_rows = self.parquet_row_group_rows
 
-        def _merge_bucket(iterator):
+        def _merge_bin(iterator):
             import pyarrow as pa
             import pyarrow.compute as pc
             import pyarrow.parquet as pq
@@ -622,15 +651,20 @@ class LakeTable:
                     )
                 return out
 
-            def emit(out, b, file_idx):
+            # file index unique across every row this task handles: two
+            # ranges of one bucket can share a task and must not share a
+            # file name
+            file_idx = itertools.count()
+
+            def emit(out, b):
                 """Stream back (read mode) or write a parquet file and
                 yield its metadata row (fused write mode)."""
                 if abs_write_dir is None:
                     yield from out.to_batches(max_chunksize=8192)
                     return
                 yield task_file_batch(write_task_file(
-                    out, abs_write_dir, write_rel, b, file_idx, key_cols[0],
-                    codec=codec, row_group_rows=rg_rows,
+                    out, abs_write_dir, write_rel, b, next(file_idx),
+                    key_cols[0], codec=codec, row_group_rows=rg_rows,
                 ))
 
             def merge_ranged(specs, b, edges):
@@ -648,7 +682,6 @@ class LakeTable:
                 pfs = [pq.ParquetFile(spec["path"]) for spec in specs]
                 metas = [pf.metadata for pf in pfs]
                 physes = [_phys_keys(proj, spec, key_idx) for spec in specs]
-                out_idx = 0
                 for lo, hi in zip(edges[:-1], edges[1:]):
                     parts = []
                     for pf, meta, spec, phys in zip(pfs, metas, specs, physes):
@@ -688,62 +721,62 @@ class LakeTable:
                         continue
                     out = dedup(parts)
                     if out is not None and out.num_rows:
-                        yield from emit(out, b, out_idx)
-                        out_idx += 1
+                        yield from emit(out, b)
+
+            def merge_row(b, specs, size, lo, hi):
+                """Merge one metadata row: a driver-split key range, or a
+                whole bucket."""
+                if lo is not None:
+                    # driver-split range: merge exactly this (lo, hi]
+                    # slice of the bucket (in parallel with the bucket's
+                    # other ranges when they land in other tasks)
+                    yield from merge_ranged(specs, b, [lo, hi])
+                    return
+                # read mode: an oversized bucket merges range by range
+                # (bounded memory); fused writes were split, or found
+                # unsplittable, by the driver already
+                if abs_write_dir is None and filter_repos is None and size > range_target:
+                    edges = _plan_key_ranges(specs, proj, key_idx, range_target)
+                    if edges is not None:
+                        yield from merge_ranged(specs, b, edges)
+                        return
+                parts = []
+                for spec in specs:
+                    # Selective lookups push the repo predicate into the
+                    # parquet read: files are key-sorted, so min/max row-
+                    # group stats skip everything but the target repos.
+                    # The predicate must use the file's PHYSICAL column
+                    # name (historical schemas may carry a renamed key).
+                    flt = None
+                    if filter_repos:
+                        phys_repo = proj[spec["sv"]][key_idx[0]]
+                        if phys_repo is not None:
+                            flt = [(phys_repo, "in", filter_repos)]
+                    t = pq.read_table(spec["path"], filters=flt)
+                    parts.append(align(t, spec))
+                out = dedup(parts)
+                if out is None:
+                    return
+                if abs_write_dir is None:
+                    yield from out.to_batches(max_chunksize=8192)
+                    return
+                m = out.num_rows
+                k = max(1, min(files_per_bucket, m))
+                step = -(-m // k)
+                for i in range(k):
+                    piece = out.slice(i * step, step)
+                    if piece.num_rows:
+                        yield from emit(piece, b)
 
             for mb in iterator:
-                for row in mb.to_pylist():
-                    specs = _json.loads(row["files"])
-                    b = int(row["bucket"])
-                    if row.get("lo") is not None:
-                        # driver-split range task: merge exactly this
-                        # (lo, hi] slice of the bucket (parallel with the
-                        # bucket's other ranges; files are attempt-unique)
-                        yield from merge_ranged(specs, b, [row["lo"], row["hi"]])
-                        continue
-                    # read mode: an oversized bucket merges range by range
-                    # (bounded memory); fused writes were split, or found
-                    # unsplittable, by the driver already
-                    total = sum(os.path.getsize(s["path"]) for s in specs)
-                    if abs_write_dir is None and filter_repos is None and total > range_target:
-                        edges = _plan_key_ranges(specs, proj, key_idx, range_target)
-                        if edges is not None:
-                            yield from merge_ranged(specs, b, edges)
-                            continue
-                    parts = []
-                    for spec in specs:
-                        # Selective lookups push the repo predicate into the
-                        # parquet read: files are key-sorted, so min/max row-
-                        # group stats skip everything but the target repos.
-                        # The predicate must use the file's PHYSICAL column
-                        # name (historical schemas may carry a renamed key).
-                        flt = None
-                        if filter_repos:
-                            phys_repo = proj[spec["sv"]][key_idx[0]]
-                            if phys_repo is not None:
-                                flt = [(phys_repo, "in", filter_repos)]
-                        t = pq.read_table(spec["path"], filters=flt)
-                        parts.append(align(t, spec))
-                    out = dedup(parts)
-                    if out is None:
-                        continue
-                    if abs_write_dir is None:
-                        yield from out.to_batches(max_chunksize=8192)
-                        continue
-                    m = out.num_rows
-                    k = max(1, min(files_per_bucket, m))
-                    step = -(-m // k)
-                    for i in range(k):
-                        piece = out.slice(i * step, step)
-                        if piece.num_rows:
-                            yield from emit(piece, b, i)
+                for j in mb.column(0).to_pylist():
+                    for row in bins[j]:
+                        yield from merge_row(*row)
 
-        rdd = self.spark.sparkContext.parallelize(meta_rows, max(1, len(meta_rows)))
-        meta_df = self.spark.createDataFrame(
-            rdd, "bucket int, files string, lo string, hi string"
-        )
         result_schema = TASK_FILE_DDL if write_rel else out_schema
-        return meta_df.mapInArrow(_merge_bucket, schema=result_schema)
+        return self.spark.range(len(bins), numPartitions=len(bins)).mapInArrow(
+            _merge_bin, schema=result_schema
+        )
 
     def _read_merged(
         self, rec: dict, files: list[dict], filter_repos: list[str] | None = None
@@ -1478,8 +1511,9 @@ class LakeTable:
         with key churn carries every deleted key's tombstone forever: the
         table's dead weight grows with lifetime deletes, not live rows.
 
-        Rides the fused compaction kernel (one task per bucket, no
-        exchange); idempotent and crash-safe like any compaction. The
+        Rides the fused compaction kernel (buckets packed into at most
+        one task per slot, no exchange); idempotent and crash-safe like
+        any compaction. The
         IcebergBackend twin needs no GC — its MERGE deletes rows physically
         (``lake/iceberg.py:merge_sql``), trading this backend's stronger
         stale-re-delivery protection for zero tombstone debt."""
@@ -1503,11 +1537,13 @@ class LakeTable:
         buckets compact without touching cold ones.
         ``drop_tombstones_below``: see :meth:`purge_tombstones`.
 
-        Fully fused: one Spark job whose tasks read a bucket's generations,
-        merge them in Arrow, and write the compacted parquet in place
+        Fully fused: one Spark job of at most ``defaultParallelism`` tasks,
+        fed by a JVM range; each task takes a largest-first bin of buckets
+        (or key ranges of an oversized bucket), reads their generations,
+        merges them in Arrow, and writes the compacted parquet in place
         (``_bucket_local_merge(write_rel=...)``); the driver only collects
         per-file metadata and swaps the commit record. No exchange, no
-        Python→JVM payload transfer, no second encode."""
+        Python RDD, no Python→JVM payload transfer, no second encode."""
         rec = self._current()
         bset = set(buckets)
         target = [f for f in rec["files"] if f["bucket"] in bset]

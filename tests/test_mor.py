@@ -92,6 +92,9 @@ def test_mor_read_plan_has_no_exchange(spark, tmp_path):
     df = mor.table.read()
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan
+    # the merge tasks are fed by a JVM range, not a Python RDD scan
+    assert "Range" in plan, plan
+    assert "ExistingRDD" not in plan and "PythonRDD" not in plan, plan
     # and the merged read is still correct: one live row per key, no dups
     dup = df.groupBy("repo", "path").count().where(F.col("count") > 1).count()
     assert dup == 0
@@ -99,7 +102,7 @@ def test_mor_read_plan_has_no_exchange(spark, tmp_path):
 
 def test_mor_read_cost_flat_in_generations(spark, tmp_path):
     """Read work should not balloon with delta-generation count: the plan
-    shape (metadata scan → mapInArrow) is identical at 1 and N generations."""
+    shape (range → mapInArrow) is identical at 1 and N generations."""
     tmp = str(tmp_path)
     ev = gen_change_events(spark, n_events=4000, n_keys=300)
     write_event_log(ev, f"{tmp}/events", epoch_size=400)  # 10 generations
@@ -352,8 +355,14 @@ def test_ranged_merge_bounded_memory_path(spark, tmp_path, monkeypatch):
     bounded-memory path for 100GB buckets). Force it on toy data — tiny
     threshold + small row groups so the big file yields multiple range
     candidates — and pin byte-identical results vs the whole-bucket path,
-    for both the read and the fused-compaction write."""
+    for both the read and the fused-compaction write. The compaction has
+    more ranges than slots, so it runs at most defaultParallelism tasks
+    and ranges of one bucket share a task; each range must still land as
+    its own file (a per-row file index would overwrite one range's file
+    with the next and lose its rows)."""
     from foundry_es_spark.lake import LakeTable
+    from foundry_es_spark.lake import table as table_mod
+    from foundry_es_spark.lake.table import KEY_SEP, bucket_expr
 
     tmp = str(tmp_path)
     ev = gen_change_events(spark, n_events=5000, n_keys=600, hot_frac=0.3)
@@ -376,14 +385,69 @@ def test_ranged_merge_bounded_memory_path(spark, tmp_path, monkeypatch):
     ranged = _digest(pipe.table.read())
     assert ranged == whole
 
-    # fused compaction through the ranged path: multiple range files per
-    # bucket, state unchanged, and subsequent pure-base read identical
+    # fused compaction through the ranged path: one file per range that
+    # holds a key (edges come from per-column row-group stats, so a range
+    # can hold none), state unchanged, and subsequent pure-base read
+    # identical
     t = pipe.table
-    buckets = sorted({f["bucket"] for f in t._current()["files"]})
-    stats = t.compact_buckets(buckets)
-    assert stats["files_written"] > len(buckets), "expected one file per range"
+    keys = t.read_internal().select(
+        bucket_expr(2).alias("b"), F.concat_ws(KEY_SEP, "repo", "path").alias("k")
+    ).collect()
+    packed = []
+    pack = table_mod._pack_bins
+
+    def spy(items, weights, k):
+        packed.append(pack(items, weights, k))
+        return packed[-1]
+
+    monkeypatch.setattr(table_mod, "_pack_bins", spy)
+    sc = spark.sparkContext
+    sc.setJobGroup("ranged-compaction", "ranged compaction")
+    try:
+        stats = t.compact_buckets([0, 1])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    (bins,) = packed
+    n_ranges = sum(
+        any(r["b"] == b and lo < r["k"] <= hi for r in keys)
+        for bin_ in bins for b, _, _, lo, hi in bin_
+    )
+    assert n_ranges > sc.defaultParallelism, "need more ranges than slots"
+    assert any(len({row[0] for row in bin_}) < len(bin_) for bin_ in bins), (
+        "expected two ranges of one bucket in one task"
+    )
+    tracker = sc.statusTracker()
+    tasks = [
+        tracker.getStageInfo(s).numTasks
+        for j in tracker.getJobIdsForGroup("ranged-compaction")
+        for s in tracker.getJobInfo(j).stageIds
+    ]
+    assert tasks and max(tasks) <= sc.defaultParallelism, tasks
+    assert stats["files_written"] == n_ranges
+    paths = [f["path"] for f in t._current()["files"]]
+    assert len(paths) == len(set(paths)) == n_ranges
     assert not any(f.get("delta") for f in t._current()["files"])
     assert _digest(t.read()) == whole
+
+
+def test_pack_bins_balances_largest_first():
+    """The merge's packing helper (Spark-free): every item lands in exactly
+    one bin, there are at most k bins, and the heaviest bin is at most one
+    item above the mean load."""
+    import random
+
+    from foundry_es_spark.lake.table import _pack_bins
+
+    rng = random.Random(7)
+    for n in (1, 2, 5, 16, 40):
+        for k in (1, 3, 4, 16, 64):
+            weights = [rng.choice([0, 1, rng.randrange(10**6)]) for _ in range(n)]
+            bins = _pack_bins(list(range(n)), weights, k)
+            assert 1 <= len(bins) <= k
+            assert sorted(i for b in bins for i in b) == list(range(n))
+            mean = sum(weights) / min(k, n)
+            heaviest = max(sum(weights[i] for i in b) for b in bins)
+            assert heaviest <= mean + max(weights)
 
 
 def test_compaction_splits_hot_bucket_into_parallel_range_tasks(
