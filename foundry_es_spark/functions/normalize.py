@@ -208,26 +208,166 @@ def dats_nested_expr(content_col: str | Column = "content") -> Column:
 
 
 def with_normalized_columns(df: DataFrame, content_col: str = "content") -> DataFrame:
-    """The full T1+T2+T3 enhancement applied to a change batch.
+    """The full T1+T2+T3 enhancement applied to a DataFrame, in Spark.
 
     Cheap columns native (sha256, n_lines, n_chars, lang); the text-analysis
     struct via ONE Arrow-vectorized UDF call. D tombstones (null content)
-    produce null derived columns.
+    produce null derived columns. The epoch body does not call this: it
+    takes ``content_sha256`` before the exchange and the rest from
+    :func:`enrich_arrow` inside the compaction kernel, which computes the
+    same values (pinned by ``tests/test_enrich.py``).
     """
     c = F.col(content_col)
-    out = (
+    return (
         df.withColumn("content_sha256", F.sha2(c, 256))
         .withColumn("n_lines", F.when(c.isNotNull(), F.size(F.split(c, "\n"))))
         .withColumn("n_chars", F.when(c.isNotNull(), F.length(c)).cast("long"))
         .withColumn("lang", normalize_lang("lang"))
+        .withColumn("meta", F.when(c.isNotNull(), dats_normalize_meta(c)))
+        .withColumn("dats", dats_nested_expr(content_col))
     )
-    if "meta" not in df.columns:
-        # the sorted compaction kernel (operators/cdc.py) already emits
-        # meta in its Arrow pass; don't pay a second transfer
-        out = out.withColumn("meta", F.when(c.isNotNull(), dats_normalize_meta(c)))
-    if "dats" not in df.columns:
-        out = out.withColumn("dats", dats_nested_expr(content_col))
-    return out
+
+
+# ------------------------------------- the same enrichment, in one Arrow pass
+
+# Columns :func:`enrich_arrow` fills; ``content_sha256`` is not among them
+# (pyarrow has no SHA-256 kernel: the epoch takes the JVM's sha2 before the
+# exchange, and the fold carries it along with ``content``).
+ARROW_ENRICHED_COLS = ("lang", "n_lines", "n_chars", "meta", "dats")
+
+_HEX_ID = r"\b[0-9a-f]{8,64}\b"
+_ISO_DATE = r"\b\d{4}-\d{2}-\d{2}\b"
+
+
+def _extract_all(content, pattern: str):
+    """Every non-overlapping match of ``pattern`` in each row, left to
+    right, as parallel ``(row, value)`` arrays (pyarrow has no extract-all
+    kernel). Each match is wrapped in a NUL sentinel and the row split on
+    it, so matches sit at the odd positions of each row's pieces. NULs in
+    the content become \\x01 first: both are non-word characters, so no
+    ``\\b`` moves, and no match of these patterns can hold either."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    marked = pc.replace_substring_regex(
+        pc.replace_substring(content, "\x00", "\x01"), pattern, "\x00\\0\x00"
+    )
+    pieces = pc.split_pattern(marked, "\x00")
+    row = pc.list_parent_indices(pieces).to_numpy()
+    flat = pc.list_flatten(pieces)
+    idx = np.arange(len(row))
+    start = np.ones(len(row), dtype=bool)
+    start[1:] = row[1:] != row[:-1]
+    pos = idx - np.maximum.accumulate(np.where(start, idx, 0))
+    odd = pos % 2 == 1
+    return row[odd], flat.filter(pa.array(odd))
+
+
+def _sorted_distinct_lists(n: int, row, values):
+    """Per-row ``array_sort(array_distinct(...))`` of ``(row, value)``
+    pairs: one sort by (row, value), then a boundary compare. Returns the
+    list offsets (int32, ``n + 1``) and the kept values."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    t = pa.table({"r": row, "v": values}).sort_by([("r", "ascending"), ("v", "ascending")])
+    r = t.column("r").to_numpy()
+    v = t.column("v").combine_chunks()
+    keep = np.ones(len(r), dtype=bool)
+    if len(r) > 1:
+        keep[1:] = (r[1:] != r[:-1]) | pc.not_equal(v.slice(1), v.slice(0, len(v) - 1)).to_numpy(
+            zero_copy_only=False
+        )
+    offsets = np.zeros(n + 1, dtype=np.int32)
+    np.cumsum(np.bincount(r[keep], minlength=n), out=offsets[1:])
+    return pa.array(offsets), v.filter(pa.array(keep))
+
+
+def dats_nested_arrow(content, dats_type=None):
+    """:func:`dats_nested_expr` in Arrow kernels, for the epoch kernel.
+    ``dats_type``: the Arrow type to build (the table column's; default
+    the Arrow form of ``DATS_NESTED_TYPE``).
+
+    Regex semantics are RE2's, where ``\\b`` is an ASCII word boundary:
+    a hex run right after a non-ASCII letter (``é0123abcd``) is an
+    identifier here, while JDK 17's ``java.util.regex`` (Spark's
+    ``regexp_extract_all``) counts the letter as a word character and
+    finds none. ``meta.first_identifier`` has always used RE2, so the two
+    columns now agree. Dates parse as ``try_to_timestamp`` does: a token
+    that is not a calendar date (``2024-02-30``, ``2024-13-99``) keeps
+    its raw value with a null ``d``; Arrow's ``strptime`` rolls such days
+    over, so a parse that does not format back to the token is nulled."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if isinstance(content, pa.ChunkedArray):
+        content = content.combine_chunks()
+    if dats_type is None:
+        from pyspark.sql.pandas.types import to_arrow_type
+
+        dats_type = to_arrow_type(DATS_NESTED_TYPE)
+    n = len(content)
+    ids_t, dates_t = dats_type.field("identifiers").type, dats_type.field("dates").type
+
+    offs, v = _sorted_distinct_lists(n, *_extract_all(content, _HEX_ID))
+    width = pc.utf8_length(v)
+    scheme = pc.if_else(
+        pc.equal(width, 40), "sha1", pc.if_else(pc.equal(width, 64), "sha256", "hex")
+    )
+    ids = pa.ListArray.from_arrays(
+        offs, pa.StructArray.from_arrays([v, scheme], fields=list(ids_t.value_type)), type=ids_t
+    )
+
+    offs, raw = _sorted_distinct_lists(n, *_extract_all(content, _ISO_DATE))
+    ts = pc.strptime(raw, format="%Y-%m-%d", unit="s", error_is_null=True)
+    real = pc.equal(pc.strftime(ts, format="%Y-%m-%d"), raw)
+    d = pc.if_else(real, pc.cast(ts, pa.date32()), pa.scalar(None, pa.date32()))
+    dates = pa.ListArray.from_arrays(
+        offs, pa.StructArray.from_arrays([raw, d], fields=list(dates_t.value_type)), type=dates_t
+    )
+    return pa.StructArray.from_arrays(
+        [ids, dates], fields=list(dats_type), mask=pc.is_null(content)
+    )
+
+
+def enrich_arrow(tbl, content_col: str = "content"):
+    """The enrichment of :func:`with_normalized_columns` (all but
+    ``content_sha256``) as one Arrow pass over a table: each column of
+    :data:`ARROW_ENRICHED_COLS` that ``tbl`` holds is replaced, keeping its
+    type, by the value computed from ``content`` (``lang``: from itself).
+    Absent columns stay absent, so a table schema without the normalized
+    fields still gets its ``lang`` canonicalised, as in Spark. Vectorised
+    kernels only: no row loop."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    content = tbl.column(content_col).combine_chunks()
+    names = tbl.column_names
+
+    def fill(name, make):
+        nonlocal tbl
+        if name in names:
+            i = names.index(name)
+            typ = tbl.schema.field(i).type
+            col = make(typ)
+            tbl = tbl.set_column(i, tbl.schema.field(i), col if col.type == typ else col.cast(typ))
+
+    def lang(_):
+        raw = tbl.column("lang").combine_chunks()
+        canon = pc.take(
+            pa.array(list(LANG_CANON.values())),
+            pc.index_in(pc.utf8_lower(raw), value_set=pa.array(list(LANG_CANON))),
+        )
+        return pc.coalesce(canon, raw)
+
+    fill("lang", lang)
+    fill("n_lines", lambda _: pc.add(pc.count_substring(content, "\n"), 1))
+    fill("n_chars", lambda _: pc.utf8_length(content))
+    fill("meta", lambda _: dats_meta_arrow(content))
+    fill("dats", lambda typ: dats_nested_arrow(content, typ))
+    return tbl
 
 
 # Derived (name, ddl-type) pairs added to the base table schema by the

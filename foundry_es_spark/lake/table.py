@@ -155,11 +155,17 @@ def _plan_key_ranges(
     """Combined-key range edges for merging an OVERSIZED bucket in
     ``(lo, hi]`` slices: the driver splits a fused rewrite into parallel
     per-range tasks, a read task merges range by range in bounded memory.
-    Edges come from the row-group stats of the bucket's largest file — a
-    pure function of footers (one footer read, the same budget class as
-    ``_footer_key_bounds``), so it runs on either side. Returns None
-    (caller keeps the whole-bucket path) when stats are unusable or give
-    no interior bound."""
+    Edges are real keys of the bucket's largest file (key-sorted): the
+    last key of every ``step``-th row group, read from the key columns of
+    those row groups alone, after one footer read (the same budget class
+    as ``_footer_key_bounds``), so it runs on either side. A range
+    ``(lo, hi]`` therefore holds at least its edge key, and the last holds
+    the rows after the final edge: no planned range is empty (its rows
+    can still all fold away, as tombstones past a GC horizon). (Joined
+    per-column row-group maxima need not be a key, and ranges between
+    such bounds could hold none.) Returns None (caller keeps the
+    whole-bucket path) when key stats are unusable (non-string keys) or
+    give no interior bound."""
     import pyarrow.parquet as pq
 
     sizes = [os.path.getsize(s["path"]) for s in specs]
@@ -169,17 +175,19 @@ def _plan_key_ranges(
     if phys is None:
         return None
     try:
-        meta = pq.ParquetFile(specs[big]["path"]).metadata
+        pf = pq.ParquetFile(specs[big]["path"])
     except OSError:
         return None
-    cands = []
-    for rg in range(meta.num_row_groups):
-        kb = _row_group_key_bounds(meta, rg, phys)
-        if kb is None:
-            return None
-        cands.append(kb[1])
-    step = max(1, len(cands) // n_ranges)
-    bounds = sorted(set(cands[step - 1 :: step]))[:-1]
+    meta = pf.metadata
+    n_rg = meta.num_row_groups
+    if any(_row_group_key_bounds(meta, rg, phys) is None for rg in range(n_rg)):
+        return None
+    step = max(1, n_rg // n_ranges)
+    cands = set()
+    for rg in range(step - 1, n_rg, step):
+        t = pf.read_row_group(rg, columns=phys)
+        cands.add(KEY_SEP.join(t.column(k)[t.num_rows - 1].as_py() for k in phys))
+    bounds = sorted(cands)[:-1]
     return [""] + bounds + ["\U0010ffff" * 4] if bounds else None
 
 

@@ -132,6 +132,7 @@ def compact_sorted_partitions(
     key_cols: list[str] | None = None,
     order_col: str = "seq",
     n_salts: int | None = None,
+    enrich: bool = False,
     emit_meta: bool = False,
     metrics_acc=None,
     num_partitions: int | None = None,
@@ -156,6 +157,16 @@ def compact_sorted_partitions(
     epoch_bytes / (n_buckets * files_per_bucket), bounded by choosing
     bucket counts for the target epoch size (the same sizing rule any
     hash-partitioned sink needs).
+
+    ``enrich`` — fill the enrichment columns the rows carry (of
+    ``functions.normalize.ARROW_ENRICHED_COLS``: the ``lang`` map,
+    ``n_lines``, ``n_chars``, ``meta``, ``dats``; the caller projects the
+    others as typed null placeholders) from each survivor's ``content``
+    with :func:`~foundry_es_spark.functions.normalize.enrich_arrow`: one
+    Arrow pass over the folded rows, after the fold, so superseded events
+    are never enriched. ``content_sha256`` is the caller's (pyarrow has no
+    SHA-256); the fold carries it with ``content``. ``emit_meta`` adds a
+    ``meta`` placeholder to rows without one and enriches them.
 
     ``sink_spec`` — fused-sink mode (``{"abs_dir", "rel", "codec"}``):
     instead of streaming deduped rows back to the JVM, each task writes
@@ -214,6 +225,11 @@ def compact_sorted_partitions(
     else:
         hot_buckets = []
         salt = base_salt
+    if emit_meta and "meta" not in events.columns:
+        from foundry_es_spark.functions.normalize import DATS_META_TYPE
+
+        events = events.withColumn("meta", F.lit(None).cast(DATS_META_TYPE))
+    enrich = enrich or emit_meta
     events = events.withColumn("bkt", bucket_expr(n_buckets)).withColumn(
         "_salt", salt
     )
@@ -235,22 +251,12 @@ def compact_sorted_partitions(
     ).sortWithinPartitions(*key_cols, order_col)
     kc = list(key_cols)
 
-    out_fields = list(parted.schema.fields)
-    if emit_meta:
-        from pyspark.sql import types as T
-
-        from foundry_es_spark.functions.normalize import DATS_META_TYPE
-
-        out_fields = out_fields + [T.StructField("meta", DATS_META_TYPE, True)]
-        out_schema = T.StructType(out_fields)
-    else:
-        out_schema = parted.schema
     op_col = "_op" if "_op" in parted.columns else "op"
 
     def _dedup_gen(batches):
         """Whole partition in Arrow: :func:`fold_key_runs` over the sorted
-        key runs, then (optionally) the DATS meta struct — zero pandas
-        conversion, RE2-backed kernels, no per-row Python. When a metrics
+        key runs, then (``enrich``) the enrichment columns of the survivors
+        — zero pandas conversion, RE2-backed kernels, no per-row Python. When a metrics
         accumulator is supplied, the partition reports (rows, seconds) for
         the straggler assertion (operators/metrics.py) — consuming the
         input iterator is inside the window, so shuffle fetch counts."""
@@ -299,10 +305,10 @@ def compact_sorted_partitions(
                 }
             )
         out = fold_key_runs(tbl, kc, op_col, order_col)
-        if emit_meta:
-            from foundry_es_spark.functions.normalize import dats_meta_arrow
+        if enrich:
+            from foundry_es_spark.functions.normalize import enrich_arrow
 
-            out = out.append_column("meta", dats_meta_arrow(out.column("content")))
+            out = enrich_arrow(out)
         if sink_spec is None:
             yield from out.to_batches(max_chunksize=8192)
             _report(n)
@@ -333,7 +339,7 @@ def compact_sorted_partitions(
         from foundry_es_spark.lake.taskfile import TASK_FILE_DDL
 
         return parted.mapInArrow(_dedup_gen, schema=TASK_FILE_DDL + ", deletes long")
-    return parted.mapInArrow(_dedup_gen, schema=out_schema).drop("_salt")
+    return parted.mapInArrow(_dedup_gen, schema=parted.schema).drop("_salt")
 
 
 def suppress_unchanged(

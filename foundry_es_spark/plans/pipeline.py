@@ -1,4 +1,4 @@
-"""The CDC epoch body: validate → compact → normalize → evolve → merge.
+"""The CDC epoch body: validate → evolve → compact + enrich → merge.
 
 This is the Spark-native restatement of the reference's
 ingest→dispatch→enhance→index state machine (SURVEY.md §3.1): what the
@@ -23,10 +23,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from foundry_es_spark.functions.normalize import (
-    NORMALIZED_FIELDS,
-    with_normalized_columns,
-)
+from foundry_es_spark.functions.normalize import NORMALIZED_FIELDS
 from foundry_es_spark.lake import LakeTable
 from foundry_es_spark.lake import log as commitlog
 from foundry_es_spark.lake.backend import supports_fused_sink
@@ -174,7 +171,12 @@ class PipelineConfig:
     n_buckets: int = 16
     n_parts: int = 8                 # stream partitions for offset tracking
     files_per_bucket: int = 1        # >1 parallelizes writes of hot buckets
-    normalize: bool = True           # T1/T2 enhancement stage
+    normalize: bool = True           # T1-T3 enrichment, once per surviving row:
+                                     # content_sha256 is the JVM's sha2 before the
+                                     # exchange; lang/n_lines/n_chars/meta/dats are
+                                     # filled in the compaction kernel after the
+                                     # fold (functions/normalize.py enrich_arrow),
+                                     # on either sink
     suppress_no_ops: bool = False    # C3 (extra state read per epoch; JVM writer)
     rename_map: dict[str, str] = field(default_factory=dict)  # C7 declared renames
     compact_threshold: int = 8       # compact a bucket once it holds this many delta generations
@@ -469,12 +471,13 @@ class CdcPipeline:
         )
         bucket_acc = self._bucket_acc()
 
-        def kernel(df: DataFrame, **sink) -> DataFrame:
+        def kernel(**sink) -> DataFrame:
             return compact_sorted_partitions(
-                df,
+                self._to_table_schema(table, valid),
                 nb,
                 self.cfg.files_per_bucket,
-                emit_meta=self.cfg.normalize,
+                order_col="_seq",
+                enrich=self.cfg.normalize,
                 metrics_acc=part_acc,
                 num_partitions=self._compact_partitions(n_events),
                 hot_buckets=self._hot_buckets(),
@@ -506,24 +509,18 @@ class CdcPipeline:
             return out
 
         fence = (self.cfg.pipeline_id, epoch_id)
-        # The sink is chosen from the epoch, not configured: the fused
-        # task-writer sink when the rows are final before the kernel (no
-        # enrichment or C3 suppression after it; patch epochs included,
-        # since net-'P' rows are stored sparse) and the backend has a task
-        # writer; else the JVM writer, which enriches only the compacted
-        # survivors. Enriched epochs on the fused sink (sha256/DATS before
-        # the exchange, over every valid event) won at <=100k-event epochs
-        # but lost at 400k (CHANGES.md); moving the enrichment into the
-        # kernel is ROADMAP direction 3.
-        if (
-            not self.cfg.normalize
-            and not self.cfg.suppress_no_ops
-            and supports_fused_sink(table)
-        ):
+        # The sink is chosen from the epoch, not configured: the rows are
+        # final when the kernel emits them (enrichment runs inside it, on
+        # the folded survivors; patch epochs included, since net-'P' rows
+        # are stored sparse), so the fused task-writer sink takes every
+        # epoch whose backend has a task writer, unless C3 suppression
+        # must join the stored state after the kernel. Else the JVM writer
+        # takes the same kernel output.
+        if not self.cfg.suppress_no_ops and supports_fused_sink(table):
             # Fused task-writer sink: ONE job whose tasks end at the delta
             # parquet files. Projection to the table schema runs before the
-            # (bucket, salt) exchange; Arrow dedup and the parquet encode
-            # run inside the kernel; the driver collects
+            # (bucket, salt) exchange; Arrow dedup, enrichment and the
+            # parquet encode run inside the kernel; the driver collects
             # per-file metadata and swaps the commit — the Iceberg
             # writer/commit split. No Python→JVM payload return, no second
             # encode, no rename-based committer in the epoch hot path.
@@ -536,8 +533,6 @@ class CdcPipeline:
             version, rel = table.begin_delta_version()
             t2 = time.monotonic()
             file_rows = kernel(
-                self._to_table_schema(table, valid),
-                order_col="_seq",
                 sink_spec={
                     "abs_dir": os.path.join(self.cfg.table_dir, rel),
                     "rel": rel,
@@ -588,12 +583,9 @@ class CdcPipeline:
                 expect={"n_buckets": nb, "schema_version": write_sv},
             )
         else:
-            compacted = kernel(valid)
-
-            # T1/T2/T3 — enhancement on the compacted survivors only (far
-            # fewer rows than the raw batch when keys are updated repeatedly).
-            enriched = with_normalized_columns(compacted) if self.cfg.normalize else compacted
-            merge_batch = self._to_table_schema(table, enriched)
+            # append_delta derives `bkt` itself (the foreign backends take
+            # table columns only)
+            merge_batch = kernel().drop("bkt")
 
             if self.cfg.suppress_no_ops:
                 # C3's state read is bucket-pruned: the comparison only
@@ -627,8 +619,8 @@ class CdcPipeline:
                         "nothing was published"
                     )
 
-            # The whole epoch — compaction shuffle, Arrow-vectorized
-            # enhancement, bucket shuffle, sorted parquet write — executes
+            # The whole epoch — compaction shuffle, Arrow fold and
+            # enrichment, sorted parquet write — executes
             # as ONE Spark job; merge stats ride on Observations instead of
             # a second materialization (no persist, no duplicate shuffle).
             t2 = time.monotonic()
@@ -660,7 +652,14 @@ class CdcPipeline:
 
     def _to_table_schema(self, table, df: DataFrame) -> DataFrame:
         """Project rows to the table's (post-evolve) schema plus the
-        `_seq`/`_op` system columns; columns the batch lacks are nulls."""
+        `_seq`/`_op` system columns; columns the batch lacks are typed
+        nulls. With ``normalize`` that includes the enrichment columns the
+        kernel fills (``compact_sorted_partitions(enrich=True)``), except
+        ``content_sha256``: pyarrow has no SHA-256, so it is the JVM's
+        ``sha2`` here, in the scan's codegen (64 B per row through the
+        exchange)."""
+        if self.cfg.normalize:
+            df = df.withColumn("content_sha256", F.sha2(F.col("content"), 256))
         return df.select(
             *[
                 (F.col(uf.name) if uf.name in df.columns else F.lit(None))

@@ -29,6 +29,12 @@ def get_spark(
     - Arrow on, capped batch size: `content` rows are multi-KB, so the
       default 10k-row Arrow batches would balloon (SURVEY.md §3.3).
     - UTC session TZ: required for DuckDB-oracle comparisons.
+    - No per-call call-site capture (``spark.python.sql.dataFrameDebugging
+      .enabled=false``): PySpark otherwise wraps every Column/DataFrame
+      call in several py4j round trips (active-session and conf reads,
+      origin set and clear), ~60 ms of driver plan-build per epoch. The
+      cost: analysis errors no longer name the Python call site (the
+      DataFrame query context).
     """
     master = master or DEFAULT_MASTER
     # Make the engine package importable inside Python workers (UDF /
@@ -74,6 +80,7 @@ def get_spark(
         # not share that line
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -157,8 +157,7 @@ def _fused_crash_between_task_write_and_commit(spark, tmp_path, log, patch: bool
     ev_dir, expected = log
     cfg = PipelineConfig(
         pipeline_id="fcrash", table_dir=str(tmp_path / "table"), n_buckets=8,
-        normalize=False,  # the fused task-writer sink
-        patch_ops=patch,
+        patch_ops=patch,  # enriched (default): the fused sink enriches in the kernel
     )
     pipe = CdcPipeline(spark, cfg)
     epochs = sorted(
@@ -172,7 +171,10 @@ def _fused_crash_between_task_write_and_commit(spark, tmp_path, log, patch: bool
     committed_version = commitlog.current_version(cfg.table_dir)
     orig = table.__class__.commit_delta_files
 
-    def _boom(self, *a, **k):
+    staged = []
+
+    def _boom(self, version, files, *a, **k):
+        staged.extend(files)
         raise RuntimeError("simulated crash before commit")
 
     table.__class__.commit_delta_files = _boom
@@ -191,6 +193,15 @@ def _fused_crash_between_task_write_and_commit(spark, tmp_path, log, patch: bool
         if os.listdir(os.path.join(cfg.table_dir, "data", d))
     ]
     assert len(orphan_dirs) > committed_version  # the orphan write is there
+    # ... already enriched by the kernel: no JVM pass would have followed
+    import pyarrow.parquet as pq
+
+    assert staged
+    for f in staged:
+        t = pq.read_table(os.path.join(cfg.table_dir, f["path"]))
+        has_body = t.column("content").is_valid()
+        assert t.column("dats").is_valid().equals(has_body)
+        assert t.column("n_chars").is_valid().equals(has_body)
 
     # resume from scratch object: retry of the SAME epoch reuses/clears the
     # reserved dir, then the rest of the log applies; final state == oracle

@@ -113,16 +113,27 @@ def test_mor_read_cost_flat_in_generations(spark, tmp_path):
     assert "Exchange" not in plan, plan
 
 
+def _force_jvm_sink(mp):
+    """Hide the local backend's task writer from the sink rule, so enriched
+    epochs take the JVM writer (the Iceberg backend's sink)."""
+    from foundry_es_spark.plans import pipeline as pipeline_mod
+
+    mp.setattr(pipeline_mod, "supports_fused_sink", lambda table: False)
+
+
+def _sorted_arrow(df):
+    return df.toArrow().sort_by([("repo", "ascending"), ("path", "ascending")])
+
+
 def _fused_equals_jvm(spark, tmp_path, monkeypatch, patch: bool):
     """The fused task-writer sink (operators/cdc sink_spec + commit_delta_
-    files, taken when normalize is off) must be a pure physical change
-    against the JVM writer (taken when normalize is on): the same rows,
-    seqs and ops (tombstones included), the JVM table's digest equal to
-    sha256 of the fused table's content, and the same per-epoch lineage
-    counts. Also pins that the fused epochs really committed task-written
-    delta files and the JVM ones none. The patch case replays a patch log
-    (net-'P' rows stored sparse by both sinks) and checks the fused state
-    against the patch fold oracle too."""
+    files) must be a pure physical change against the JVM writer, both
+    enriched in the kernel: the same rows on every column, enrichment,
+    seqs and ops (tombstones included) among them, and the same per-epoch
+    lineage counts. Also pins that the fused epochs really committed
+    task-written delta files and the forced-JVM ones none. The patch case
+    replays a patch log (net-'P' rows stored sparse by both sinks) and
+    checks the fused state against the patch fold oracle too."""
     tmp = str(tmp_path)
     ev = gen_change_events(spark, n_events=5000, n_keys=700, hot_frac=0.4)
     if patch:
@@ -138,26 +149,20 @@ def _fused_equals_jvm(spark, tmp_path, monkeypatch, patch: bool):
 
     monkeypatch.setattr(LakeTable, "commit_delta_files", counting_commit)
     kw = dict(compact_threshold=3, patch_ops=patch)
-    fused = _replay(spark, tmp, "fused", f"{tmp}/events", normalize=False, **kw)
-    jvm = _replay(spark, tmp, "jvm", f"{tmp}/events", normalize=True, **kw)
+    fused = _replay(spark, tmp, "fused", f"{tmp}/events", **kw)
+    with monkeypatch.context() as mp:
+        _force_jvm_sink(mp)
+        jvm = _replay(spark, tmp, "jvm", f"{tmp}/events", **kw)
     # one task-writer commit per fused epoch, none on the JVM replay
     assert fused_commits == [fused.cfg.table_dir] * len(fused._epoch_infos())
     assert all(r["files_written"] > 0 for r in fused._epoch_infos())
 
-    cols = ["repo", "path", "commit", "content", "_seq", "_op"]
-
-    def rows(df):
-        return df.toPandas().sort_values(["repo", "path"]).reset_index(drop=True)
-
-    pd.testing.assert_frame_equal(
-        rows(fused.table.read_internal().select(*cols)),
-        rows(jvm.table.read_internal().select(*cols)),
-    )
-    pd.testing.assert_frame_equal(
-        rows(fused.table.read().select(
-            "repo", "path", F.sha2("content", 256).alias("content_sha256"))),
-        rows(jvm.table.read().select("repo", "path", "content_sha256")),
-    )
+    got = _sorted_arrow(fused.table.read_internal())
+    exp = _sorted_arrow(jvm.table.read_internal())
+    assert got.column_names == exp.column_names
+    assert {"content_sha256", "n_lines", "n_chars", "meta", "dats"} <= set(got.column_names)
+    for c in got.column_names:
+        assert got.column(c).equals(exp.column(c)), c
 
     def counts(pipe):
         return {r["epoch"]: (r["n_keys"], r["n_deletes"]) for r in pipe._epoch_infos()}
@@ -166,7 +171,10 @@ def _fused_equals_jvm(spark, tmp_path, monkeypatch, patch: bool):
     if patch:
         oc = ["repo", "path", "commit", "content"]
         exp = fold_events_patch(ev.toPandas())[oc].reset_index(drop=True)
-        pd.testing.assert_frame_equal(rows(fused.table.read().select(*oc)), exp)
+        got = fused.table.read().select(*oc).toPandas()
+        pd.testing.assert_frame_equal(
+            got.sort_values(["repo", "path"]).reset_index(drop=True), exp
+        )
 
 
 def test_fused_sink_equals_jvm_sink(spark, tmp_path, monkeypatch):
@@ -177,19 +185,22 @@ def test_fused_sink_equals_jvm_sink_patch_log(spark, tmp_path, monkeypatch):
     _fused_equals_jvm(spark, tmp_path, monkeypatch, patch=True)
 
 
-@pytest.fixture(scope="module", params=[True, False], ids=["jvm", "fused"])
+@pytest.fixture(scope="module", params=["jvm", "fused"])
 def metered_replay(request, spark, tmp_path_factory):
-    """A short replay with partition metrics on, enriched (JVM writer) or
-    not (fused sink); no compaction, so every epoch's record is written by
-    its own commit."""
+    """A short enriched replay with partition metrics on, through the JVM
+    writer (forced) or the fused sink; no compaction, so every epoch's
+    record is written by its own commit."""
     tmp = str(tmp_path_factory.mktemp("metered"))
     ev = gen_change_events(spark, n_events=2400, n_keys=400)
     write_event_log(ev, f"{tmp}/events", epoch_size=800)
     pipe = CdcPipeline(spark, PipelineConfig(
         pipeline_id="m", table_dir=f"{tmp}/t", n_buckets=8,
-        normalize=request.param, record_partition_metrics=True,
+        record_partition_metrics=True,
     ))
-    return pipe, pipe.replay_event_dir(f"{tmp}/events")
+    with pytest.MonkeyPatch.context() as mp:
+        if request.param == "jvm":
+            _force_jvm_sink(mp)
+        return pipe, pipe.replay_event_dir(f"{tmp}/events")
 
 
 def test_apply_epoch_returns_committed_record(metered_replay):
@@ -385,10 +396,9 @@ def test_ranged_merge_bounded_memory_path(spark, tmp_path, monkeypatch):
     ranged = _digest(pipe.table.read())
     assert ranged == whole
 
-    # fused compaction through the ranged path: one file per range that
-    # holds a key (edges come from per-column row-group stats, so a range
-    # can hold none), state unchanged, and subsequent pure-base read
-    # identical
+    # fused compaction through the ranged path: every planned range holds
+    # a key (edges are real keys of the largest file) and lands as one
+    # file, state unchanged, and subsequent pure-base read identical
     t = pipe.table
     keys = t.read_internal().select(
         bucket_expr(2).alias("b"), F.concat_ws(KEY_SEP, "repo", "path").alias("k")
@@ -408,10 +418,11 @@ def test_ranged_merge_bounded_memory_path(spark, tmp_path, monkeypatch):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     (bins,) = packed
-    n_ranges = sum(
-        any(r["b"] == b and lo < r["k"] <= hi for r in keys)
-        for bin_ in bins for b, _, _, lo, hi in bin_
-    )
+    ranges = [(b, lo, hi) for bin_ in bins for b, _, _, lo, hi in bin_]
+    assert all(
+        any(r["b"] == b and lo < r["k"] <= hi for r in keys) for b, lo, hi in ranges
+    ), "a planned key range holds no key"
+    n_ranges = len(ranges)
     assert n_ranges > sc.defaultParallelism, "need more ranges than slots"
     assert any(len({row[0] for row in bin_}) < len(bin_) for bin_ in bins), (
         "expected two ranges of one bucket in one task"

@@ -9,6 +9,7 @@ and the unfenced epoch replays exactly-once after the audit passes.
 from __future__ import annotations
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -37,22 +38,25 @@ def _digest(df):
     )
 
 
-@pytest.mark.parametrize(
-    "cfg",
-    [
-        {},  # JVM writer (enriched default)
-        {"normalize": False},  # fused task-writer sink (true WAP)
-    ],
-    ids=["jvm", "fused"],
-)
-def test_audit_blocks_then_replays_exactly_once(spark, tmp_path, cfg):
+@pytest.mark.parametrize("sink", ["jvm", "fused"])
+def test_audit_blocks_then_replays_exactly_once(spark, tmp_path, monkeypatch, sink):
+    """Enriched (default) epochs on both sinks: the fused task-writer sink
+    audits its staged files (true WAP); the JVM writer, forced by hiding
+    the local backend's task writer, audits the epoch plan."""
+    from foundry_es_spark.plans import pipeline as pipeline_mod
+
+    if sink == "jvm":
+        monkeypatch.setattr(pipeline_mod, "supports_fused_sink", lambda table: False)
     tmp = str(tmp_path)
     events = _events(spark, tmp)
-    name = "wap_" + ("fused" if cfg else "jvm")
+    name = "wap_" + sink
 
     # reference replay without any audit
-    ref = _pipe(spark, tmp, name + "_ref", **cfg)
+    ref = _pipe(spark, tmp, name + "_ref")
     ref.replay_event_dir(events)
+    # the sink really taken: task-written files carry the attempt id
+    files = [f["path"] for f in ref.table._current()["files"]]
+    assert files and {bool(re.search(r"-a\d+\.parquet$", f)) for f in files} == {sink == "fused"}
 
     calls = {"n": 0}
     gate = {"open": False}
@@ -68,7 +72,7 @@ def test_audit_blocks_then_replays_exactly_once(spark, tmp_path, cfg):
         assert dels["d"] * 10 < dels["n"] * 9
         return gate["open"]
 
-    pipe = _pipe(spark, tmp, name, audit_fn=audit, **cfg)
+    pipe = _pipe(spark, tmp, name, audit_fn=audit)
     epoch0 = f"{events}/epoch=0"
     batch = spark.read.parquet(epoch0)
 
