@@ -138,10 +138,9 @@ def dats_normalize_meta(content: pd.Series) -> pd.DataFrame:
 
 # The DATS target schema is arrays-of-structs (identifiers[], dates[],
 # creators[]); the flat `meta` struct above covers the scalar fields, this
-# covers the nested ones. Computed with NATIVE regexp_extract_all +
-# higher-order functions — whole-stage codegen, no Python/Arrow transfer at
-# all (strictly cheaper than extending the pandas kernel, which pyarrow
-# could not do anyway: pa.compute has no extract-all).
+# covers the nested ones. Spark form: native regexp_extract_all +
+# higher-order functions (dats_nested_expr); the epoch kernel computes the
+# same struct in Arrow kernels (dats_nested_arrow, below).
 DATS_NESTED_TYPE = T.StructType(
     [
         T.StructField(
