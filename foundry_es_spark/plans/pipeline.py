@@ -808,21 +808,25 @@ class CdcPipeline:
         separate fence domains). Driver-side commit-log metadata, no
         Spark job; a table with rows but no lineage (imported/foreign)
         falls back to one column-pruned ``max(_seq)`` aggregate so
-        generated diff seqs still clear every stored row."""
-        v = commitlog.current_version(self.cfg.table_dir)
+        generated diff seqs still clear every stored row. So does a table
+        whose oldest commits were expired: their ``max_seq`` is gone with
+        them, and the stored rows (tombstones included) are what the
+        seq-conditional merge compares against."""
+        retained = commitlog.list_versions(self.cfg.table_dir)
         hw = None
-        for i in range((v or -1) + 1):
+        for i in retained:
             info = commitlog.read_commit(self.cfg.table_dir, i).get("epoch_info")
             if info and info.get("max_seq") is not None:
                 s = int(info["max_seq"])
                 hw = s if hw is None or s > hw else hw
-        if hw is not None:
+        if hw is not None and retained[0] == 0:
             return hw
         table = self.ensure_table()
         if hasattr(table, "read_internal"):
             row = table.read_internal().agg(F.max("_seq")).collect()[0][0]
-            return int(row) if row is not None else 0
-        return 0
+            if row is not None:
+                return int(row) if hw is None else max(hw, int(row))
+        return hw or 0
 
     # ------------------------------------------------- system-table views
 
