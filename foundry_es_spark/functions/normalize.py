@@ -4,12 +4,15 @@ The reference runs a per-record transformation-DSL interpreter
 [F-ES: common/.../transform/TransformationLanguageInterpreter — UNVERIFIED,
 SURVEY.md §0]; here the same enhancement is split by cost:
 
-- anything expressible with built-in ``pyspark.sql.functions`` stays
-  JVM-side inside whole-stage codegen (sha256, line/char counts, lang
-  canonicalization, date standardization);
-- genuine text analysis over ``content`` runs as ONE vectorized
-  ``pandas_udf`` returning a struct, so Python is entered once per Arrow
-  batch, never per row (BASELINE.json input_hint: "no per-row Python").
+- sha256 (pyarrow has no SHA-256 kernel) and date standardization stay
+  JVM-side inside whole-stage codegen;
+- the enrichment stored with each row (line/char counts, lang
+  canonicalization, the DATS ``meta`` and ``dats`` structs) is ONE pass of
+  Arrow kernels, :func:`enrich_arrow`: inside the epoch's compaction
+  kernel, and behind :func:`with_normalized_columns` elsewhere, so Python
+  is entered once per Arrow batch, never per row (BASELINE.json
+  input_hint: "no per-row Python"). The native Spark forms of the same
+  columns remain as the reference it is tested against.
 """
 
 from __future__ import annotations
@@ -138,9 +141,9 @@ def dats_normalize_meta(content: pd.Series) -> pd.DataFrame:
 
 # The DATS target schema is arrays-of-structs (identifiers[], dates[],
 # creators[]); the flat `meta` struct above covers the scalar fields, this
-# covers the nested ones. Spark form: native regexp_extract_all +
-# higher-order functions (dats_nested_expr); the epoch kernel computes the
-# same struct in Arrow kernels (dats_nested_arrow, below).
+# covers the nested ones. Stored form: Arrow kernels (dats_nested_arrow,
+# below); native reference form: regexp_extract_all + higher-order
+# functions (dats_nested_expr).
 DATS_NESTED_TYPE = T.StructType(
     [
         T.StructField(
@@ -207,24 +210,33 @@ def dats_nested_expr(content_col: str | Column = "content") -> Column:
 
 
 def with_normalized_columns(df: DataFrame, content_col: str = "content") -> DataFrame:
-    """The full T1+T2+T3 enhancement applied to a DataFrame, in Spark.
+    """The full T1+T2+T3 enhancement applied to a DataFrame, in Spark: the
+    epoch kernel's enrichment, so every write path stores the same values.
 
-    Cheap columns native (sha256, n_lines, n_chars, lang); the text-analysis
-    struct via ONE Arrow-vectorized UDF call. D tombstones (null content)
-    produce null derived columns. The epoch body does not call this: it
-    takes ``content_sha256`` before the exchange and the rest from
-    :func:`enrich_arrow` inside the compaction kernel, which computes the
-    same values (pinned by ``tests/test_enrich.py``).
-    """
-    c = F.col(content_col)
-    return (
-        df.withColumn("content_sha256", F.sha2(c, 256))
-        .withColumn("n_lines", F.when(c.isNotNull(), F.size(F.split(c, "\n"))))
-        .withColumn("n_chars", F.when(c.isNotNull(), F.length(c)).cast("long"))
-        .withColumn("lang", normalize_lang("lang"))
-        .withColumn("meta", F.when(c.isNotNull(), dats_normalize_meta(c)))
-        .withColumn("dats", dats_nested_expr(content_col))
-    )
+    ``content_sha256`` is the JVM's ``sha2``; the other derived columns
+    are projected as typed nulls and filled by :func:`enrich_arrow` over
+    each Arrow batch in one ``mapInArrow`` (Python is entered once per
+    batch, never per row). ``lang``, when present, is canonicalised. D
+    tombstones (null content) produce null derived columns. The native
+    forms (:func:`normalize_lang`, :func:`dats_normalize_meta`,
+    :func:`dats_nested_expr`) are the reference ``tests/test_enrich.py``
+    compares with; they differ only where JDK and RE2 regexes do (see
+    :func:`dats_nested_arrow`)."""
+    df = df.withColumn("content_sha256", F.sha2(F.col(content_col), 256))
+    for name, ddl in NORMALIZED_FIELDS:
+        if name in ARROW_ENRICHED_COLS:
+            df = df.withColumn(name, F.lit(None).cast(ddl))
+
+    def enrich(batches):
+        import pyarrow as pa
+
+        from foundry_es_spark.arrowpin import prepare_task_worker
+
+        prepare_task_worker()  # Arrow pool pin + zip finder drop; see arrowpin.py
+        for b in batches:
+            yield from enrich_arrow(pa.Table.from_batches([b]), content_col).to_batches()
+
+    return df.mapInArrow(enrich, df.schema)
 
 
 # ------------------------------------- the same enrichment, in one Arrow pass
@@ -242,16 +254,13 @@ def _extract_all(content, pattern: str):
     """Every non-overlapping match of ``pattern`` in each row, left to
     right, as parallel ``(row, value)`` arrays (pyarrow has no extract-all
     kernel). Each match is wrapped in a NUL sentinel and the row split on
-    it, so matches sit at the odd positions of each row's pieces. NULs in
-    the content become \\x01 first: both are non-word characters, so no
-    ``\\b`` moves, and no match of these patterns can hold either."""
+    it, so matches sit at the odd positions of each row's pieces.
+    ``content`` must hold no NUL (the caller maps them to \\x01)."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    marked = pc.replace_substring_regex(
-        pc.replace_substring(content, "\x00", "\x01"), pattern, "\x00\\0\x00"
-    )
+    marked = pc.replace_substring_regex(content, pattern, "\x00\\0\x00")
     pieces = pc.split_pattern(marked, "\x00")
     row = pc.list_parent_indices(pieces).to_numpy()
     flat = pc.list_flatten(pieces)
@@ -284,10 +293,9 @@ def _sorted_distinct_lists(n: int, row, values):
     return pa.array(offsets), v.filter(pa.array(keep))
 
 
-def dats_nested_arrow(content, dats_type=None):
+def dats_nested_arrow(content, dats_type):
     """:func:`dats_nested_expr` in Arrow kernels, for the epoch kernel.
-    ``dats_type``: the Arrow type to build (the table column's; default
-    the Arrow form of ``DATS_NESTED_TYPE``).
+    ``dats_type``: the Arrow type to build (the table column's).
 
     Regex semantics are RE2's, where ``\\b`` is an ASCII word boundary:
     a hex run right after a non-ASCII letter (``é0123abcd``) is an
@@ -303,14 +311,13 @@ def dats_nested_arrow(content, dats_type=None):
 
     if isinstance(content, pa.ChunkedArray):
         content = content.combine_chunks()
-    if dats_type is None:
-        from pyspark.sql.pandas.types import to_arrow_type
-
-        dats_type = to_arrow_type(DATS_NESTED_TYPE)
     n = len(content)
     ids_t, dates_t = dats_type.field("identifiers").type, dats_type.field("dates").type
+    # NUL is the match sentinel of _extract_all; \x01 is, like NUL, a
+    # non-word character, so no \b moves and no match can hold either
+    text = pc.replace_substring(content, "\x00", "\x01")
 
-    offs, v = _sorted_distinct_lists(n, *_extract_all(content, _HEX_ID))
+    offs, v = _sorted_distinct_lists(n, *_extract_all(text, _HEX_ID))
     width = pc.utf8_length(v)
     scheme = pc.if_else(
         pc.equal(width, 40), "sha1", pc.if_else(pc.equal(width, 64), "sha256", "hex")
@@ -319,7 +326,7 @@ def dats_nested_arrow(content, dats_type=None):
         offs, pa.StructArray.from_arrays([v, scheme], fields=list(ids_t.value_type)), type=ids_t
     )
 
-    offs, raw = _sorted_distinct_lists(n, *_extract_all(content, _ISO_DATE))
+    offs, raw = _sorted_distinct_lists(n, *_extract_all(text, _ISO_DATE))
     ts = pc.strptime(raw, format="%Y-%m-%d", unit="s", error_is_null=True)
     real = pc.equal(pc.strftime(ts, format="%Y-%m-%d"), raw)
     d = pc.if_else(real, pc.cast(ts, pa.date32()), pa.scalar(None, pa.date32()))
@@ -332,13 +339,12 @@ def dats_nested_arrow(content, dats_type=None):
 
 
 def enrich_arrow(tbl, content_col: str = "content"):
-    """The enrichment of :func:`with_normalized_columns` (all but
-    ``content_sha256``) as one Arrow pass over a table: each column of
-    :data:`ARROW_ENRICHED_COLS` that ``tbl`` holds is replaced, keeping its
-    type, by the value computed from ``content`` (``lang``: from itself).
-    Absent columns stay absent, so a table schema without the normalized
-    fields still gets its ``lang`` canonicalised, as in Spark. Vectorised
-    kernels only: no row loop."""
+    """The stored enrichment (all but ``content_sha256``) as one Arrow pass
+    over a table: each column of :data:`ARROW_ENRICHED_COLS` that ``tbl``
+    holds is replaced, keeping its type, by the value computed from
+    ``content`` (``lang``: from itself). Absent columns stay absent, so a
+    table schema without the normalized fields still gets its ``lang``
+    canonicalised. Vectorised kernels only: no row loop."""
     import pyarrow as pa
     import pyarrow.compute as pc
 

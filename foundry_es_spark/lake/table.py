@@ -156,14 +156,16 @@ def _plan_key_ranges(
     ``(lo, hi]`` slices: the driver splits a fused rewrite into parallel
     per-range tasks, a read task merges range by range in bounded memory.
     Edges are real keys of the bucket's largest file (key-sorted): the
-    last key of every ``step``-th row group, read from the key columns of
-    those row groups alone, after one footer read (the same budget class
-    as ``_footer_key_bounds``), so it runs on either side. A range
-    ``(lo, hi]`` therefore holds at least its edge key, and the last holds
-    the rows after the final edge: no planned range is empty (its rows
-    can still all fold away, as tombstones past a GC horizon). (Joined
-    per-column row-group maxima need not be a key, and ranges between
-    such bounds could hold none.) Returns None (caller keeps the
+    first key of every ``step``-th row group after the first. Planning
+    reads that file's footer and, per chosen row group, one row of its
+    key columns (a one-row batch decodes one page per column, not the
+    column chunk), so it runs on either side: ~8 ms for 30 edges of a
+    2M-row file against ~1.5 ms for the footer alone (BENCH/BASELINE.md).
+    A range ``(lo, hi]`` therefore holds at least its edge key, and the
+    last holds the rows after the final edge: no planned range is empty
+    (its rows can still all fold away, as tombstones past a GC horizon).
+    (Joined per-column row-group maxima need not be a key, and ranges
+    between such bounds could hold none.) Returns None (caller keeps the
     whole-bucket path) when key stats are unusable (non-string keys) or
     give no interior bound."""
     import pyarrow.parquet as pq
@@ -184,10 +186,12 @@ def _plan_key_ranges(
         return None
     step = max(1, n_rg // n_ranges)
     cands = set()
-    for rg in range(step - 1, n_rg, step):
-        t = pf.read_row_group(rg, columns=phys)
-        cands.add(KEY_SEP.join(t.column(k)[t.num_rows - 1].as_py() for k in phys))
-    bounds = sorted(cands)[:-1]
+    for rg in range(step, n_rg, step):
+        if rg == n_rg - 1 and meta.row_group(rg).num_rows < 2:
+            break  # the last range would hold no row after this edge
+        b = next(pf.iter_batches(batch_size=1, row_groups=[rg], columns=phys))
+        cands.add(KEY_SEP.join(b.column(k)[0].as_py() for k in phys))
+    bounds = sorted(cands)
     return [""] + bounds + ["\U0010ffff" * 4] if bounds else None
 
 
@@ -566,8 +570,8 @@ class LakeTable:
         # larger than range_target is split into PARALLEL per-range tasks —
         # without this a skewed bucket (one hot repo = 20%+ of the table)
         # rewrites in ONE task and its wall time caps the whole maintenance
-        # job at any cluster width. Edges come from one driver-side footer
-        # read of the bucket's largest file (:func:`_plan_key_ranges`);
+        # job at any cluster width. Edges come from the footer and a few key
+        # rows of the bucket's largest file (:func:`_plan_key_ranges`);
         # when stats are unusable the bucket is rewritten whole by one
         # task. Ranges partition the combined-key space, so per-range dedup
         # stays complete, and file names carry the task attempt and a

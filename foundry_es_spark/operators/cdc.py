@@ -165,8 +165,8 @@ def compact_sorted_partitions(
     with :func:`~foundry_es_spark.functions.normalize.enrich_arrow`: one
     Arrow pass over the folded rows, after the fold, so superseded events
     are never enriched. ``content_sha256`` is the caller's (pyarrow has no
-    SHA-256); the fold carries it with ``content``. ``emit_meta`` adds a
-    ``meta`` placeholder to rows without one and enriches them.
+    SHA-256); the fold carries it with ``content``. ``emit_meta`` is the
+    older name of ``enrich``, kept as an alias.
 
     ``sink_spec`` — fused-sink mode (``{"abs_dir", "rel", "codec"}``):
     instead of streaming deduped rows back to the JVM, each task writes
@@ -225,10 +225,6 @@ def compact_sorted_partitions(
     else:
         hot_buckets = []
         salt = base_salt
-    if emit_meta and "meta" not in events.columns:
-        from foundry_es_spark.functions.normalize import DATS_META_TYPE
-
-        events = events.withColumn("meta", F.lit(None).cast(DATS_META_TYPE))
     enrich = enrich or emit_meta
     events = events.withColumn("bkt", bucket_expr(n_buckets)).withColumn(
         "_salt", salt

@@ -1,7 +1,8 @@
 """The one enrichment: ``functions.normalize.enrich_arrow`` (the Arrow pass
-the epoch kernel runs over its folded survivors) computes what the Spark
-form, ``with_normalized_columns``, computes, column for column and type
-for type, on a corpus of edge cases."""
+the epoch kernel runs over its folded survivors) computes what the native
+Spark expressions compute, column for column, on a corpus of edge cases,
+and ``with_normalized_columns`` (the spec sources' ``normalize`` stage)
+runs that same pass through Spark."""
 
 from __future__ import annotations
 
@@ -9,11 +10,17 @@ import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
+from pyspark.sql.pandas.types import to_arrow_type
+
 from foundry_es_spark.functions.normalize import (
     ARROW_ENRICHED_COLS,
+    DATS_NESTED_TYPE,
     NORMALIZED_FIELDS,
     dats_nested_arrow,
+    dats_nested_expr,
+    dats_normalize_meta,
     enrich_arrow,
+    normalize_lang,
     with_normalized_columns,
 )
 
@@ -42,6 +49,31 @@ def _frame(spark, rows):
     )
 
 
+def _native(df):
+    """The reference: the same columns from native Spark expressions (JDK
+    regexes for ``dats``) and the RE2 ``meta`` pandas UDF."""
+    c = F.col("content")
+    return (
+        df.withColumn("content_sha256", F.sha2(c, 256))
+        .withColumn("n_lines", F.when(c.isNotNull(), F.size(F.split(c, "\n"))))
+        .withColumn("n_chars", F.when(c.isNotNull(), F.length(c)).cast("long"))
+        .withColumn("lang", normalize_lang("lang"))
+        .withColumn("meta", F.when(c.isNotNull(), dats_normalize_meta(c)))
+        .withColumn("dats", dats_nested_expr("content"))
+    )
+
+
+def _assert_rows_equal(got, ref, cols, rows):
+    for c in cols:
+        want = ref.column(c).combine_chunks()
+        have = got.column(c).combine_chunks()
+        # Spark's computed struct marks some nested fields non-null; the
+        # table's (placeholder) type does not — the values must agree
+        assert have.type == got.schema.field(c).type
+        for i in range(len(rows)):
+            assert have.slice(i, 1).equals(want.cast(have.type).slice(i, 1)), (c, rows[i])
+
+
 def _arrow_enriched(spark, rows):
     """The rows as the epoch kernel receives them: typed null placeholders
     (the table schema's types, through Spark's Arrow conversion), then
@@ -54,18 +86,22 @@ def _arrow_enriched(spark, rows):
     return enrich_arrow(tbl)
 
 
-def test_enrich_arrow_equals_spark_enrichment(spark):
+def test_enrich_arrow_equals_native_spark_form(spark):
     got = _arrow_enriched(spark, CORPUS)
-    ref = with_normalized_columns(_frame(spark, CORPUS)).orderBy("id").toArrow()
+    ref = _native(_frame(spark, CORPUS)).orderBy("id").toArrow()
     assert set(ARROW_ENRICHED_COLS) <= set(got.column_names)
-    for c in ARROW_ENRICHED_COLS:
-        want = ref.column(c).combine_chunks()
-        have = got.column(c).combine_chunks()
-        # Spark's computed struct marks some nested fields non-null; the
-        # table's (placeholder) type does not — the values must agree
-        assert have.type == got.schema.field(c).type
-        for i in range(len(CORPUS)):
-            assert have.slice(i, 1).equals(want.cast(have.type).slice(i, 1)), (c, CORPUS[i])
+    _assert_rows_equal(got, ref, ARROW_ENRICHED_COLS, CORPUS)
+
+
+def test_with_normalized_columns_runs_the_arrow_enrichment(spark):
+    """The spec-source ``normalize`` stage stores what epochs store, the
+    RE2 row included; ``content_sha256`` is the JVM's ``sha2``."""
+    rows = CORPUS + [UNICODE_ROW]
+    got = with_normalized_columns(_frame(spark, rows)).orderBy("id").toArrow()
+    _assert_rows_equal(got, _arrow_enriched(spark, rows), ARROW_ENRICHED_COLS, rows)
+    ref = _native(_frame(spark, rows)).orderBy("id").toArrow()
+    _assert_rows_equal(got, ref, ["content_sha256"], rows)
+    assert [f.name for f in got.schema][-4:] == ["n_lines", "n_chars", "meta", "dats"]
 
 
 def test_enrich_arrow_handcrafted_values(spark):
@@ -92,17 +128,20 @@ def test_enrich_arrow_handcrafted_values(spark):
 def test_unicode_word_boundary_follows_re2(spark):
     """The table follows RE2's ASCII ``\\b`` (as ``meta.first_identifier``
     always has): a hex run after a non-ASCII letter is an identifier.
-    JDK 17's regex counts the letter as a word character, so the Spark
-    form finds none there."""
-    got = _arrow_enriched(spark, [UNICODE_ROW]).column("dats").to_pylist()[0]
-    assert [i["value"] for i in got["identifiers"]] == ["abcdef12"]
-    meta = _arrow_enriched(spark, [UNICODE_ROW]).column("meta").to_pylist()[0]
-    assert meta["first_identifier"] == "abcdef12"
+    JDK 17's regex counts the letter as a word character, so the native
+    ``dats_nested_expr`` finds none there; nothing stores that form."""
+    got = _arrow_enriched(spark, [UNICODE_ROW])
+    assert [i["value"] for i in got.column("dats").to_pylist()[0]["identifiers"]] == ["abcdef12"]
+    assert got.column("meta").to_pylist()[0]["first_identifier"] == "abcdef12"
+    jdk = _native(_frame(spark, [UNICODE_ROW])).toArrow().column("dats").to_pylist()[0]
+    assert jdk["identifiers"] == []
 
 
 @pytest.mark.parametrize("n", [0, 1])
 def test_dats_nested_arrow_tiny_inputs(n):
-    out = dats_nested_arrow(pa.array(["2024-01-01 abcdef12"][:n], pa.string()))
+    out = dats_nested_arrow(
+        pa.array(["2024-01-01 abcdef12"][:n], pa.string()), to_arrow_type(DATS_NESTED_TYPE)
+    )
     assert len(out) == n
     if n:
         assert out.to_pylist()[0]["identifiers"] == [{"value": "abcdef12", "scheme": "hex"}]
